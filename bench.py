@@ -1,52 +1,47 @@
 #!/usr/bin/env python
-"""Benchmark harness.
+"""Benchmark harness: one measured run, one JSON line.
 
-Prints ONE JSON line:
+The last stdout line is the result:
   {"metric": "total_bench_sec", "value": N, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": ...,
-   "pages_per_sec": ..., "scaling": {...}}
+   "queries": {...per-query sec...}, "sf": ..., "bench_docs": ...,
+   "pages_per_sec": ..., "headline_trials": [...], "headline_cpus": ...,
+   "scaling": {...}}
 
-Three parts:
+Three parts, all measured by this run:
 1. Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-   production hash mode (xxhash64), on local[$SPARK_GRAFT_CPUS].
+   production hash mode (xxhash64), on local[$SPARK_GRAFT_CPUS] (default:
+   the cores this process may run on).
 2. End-to-end dedup throughput (pages/sec) on a deterministic synthetic
-   crawl of $SPARK_GRAFT_BENCH_DOCS pages (default 3M) — the corpus the
-   north rule actually cares about (the driver tables are only 5k rows).
-   Measured in a fresh JVM with a warm-up pass and median-of-N trials
-   (same discipline as the scaling workers).
-3. Scaling evidence: the same dedup job at local[N] vs local[4N]
-   ($SPARK_GRAFT_SCALE_CPUS, default 4,16) via child processes;
-   efficiency = (rate_4N / rate_N) / 4, target ≥ 0.8 (BASELINE.md).
-   Results also written to BENCH/BASELINE.md.
+   crawl of $SPARK_GRAFT_BENCH_DOCS pages (default 3M). Measured in a fresh
+   JVM with a warm-up pass and the median of $SPARK_GRAFT_SCALE_TRIALS
+   trials (same discipline as the scaling workers).
+3. Scaling: the same dedup job at local[N] vs local[4N]
+   ($SPARK_GRAFT_SCALE_CPUS, default 4,16) in child processes, rounds
+   interleaved; efficiency = median per-round (rate_4N / rate_N) / 4,
+   target ≥ 0.8 (BASELINE.md), computed from this run's rounds only.
 
-Run `python bench.py` (the driver does). `--skip-scaling` for quick loops.
+The same numbers are written to BENCH/BASELINE.md.
 
-Output contract: a graded invocation (bare / --full / --skip-scaling /
---scaling-only) prints a PROVISIONAL JSON line first — assembled purely
-from disk (BENCH/payload.json cache + best_scaling.json ratchet), tagged
-"provisional": true, before any Spark/JVM work — then the real measured
-line at the end. A tail parse takes whichever printed last, so even a
-run killed seconds after launch leaves parseable evidence. The
-provisional line carries NO measured-looking numbers: value/queries/
-pages_per_sec/headline_trials/scaling are null/empty; the previous run's
-cache rides only under "cached_previous_run", and banked ratchets keep
-their "*_best_recorded" labels. Additionally, EVERY invocation (even
-`--help`, even a spawn whose stdout is never captured) atomically writes
-the same payload + timestamp to BENCH/provisional_latest.json at import
-time. `-h`/`--help`/unknown args print usage + the provisional line and
-exit 2 without starting a run.
+Run `python bench.py` (or `--full`); `--skip-scaling` drops part 3. Any
+other argument prints usage and exits 2 without starting a run. Past
+$SPARK_GRAFT_BENCH_HARD_DEADLINE seconds (default 1740) a watchdog reaps the
+worker processes, prints what this run measured so far flagged
+"timed_out": true, and exits 0. SIGTERM reaps the worker processes and
+exits 143. The harness signals no process it did not start.
+
+Per-layer numbers (wall, task-seconds, shuffle, Python workers) come from
+`python3 perfbench/run.py --trace 1`; physical plans from `plan_audit.py`.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 import subprocess
 import sys
+import tempfile
 import threading
 import time
-from collections import deque
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -55,12 +50,11 @@ sys.path.insert(0, REPO)
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "40g")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "3000000"))
 BENCH_CORPUS_DIR = os.environ.get("SPARK_GRAFT_BENCH_DIR", "/dev/shm/lsh_qd_bench")
-# worker result files: overridable so tests can sandbox their spawned
-# bench processes away from a live watcher attempt's shared files
-SCALE_TMP_DIR = os.environ.get("SPARK_GRAFT_SCALE_TMPDIR", "/tmp")
 # num_bands=8 comes from the planner (params.get_k_l_minhash semantics):
 # detect probability at J=0.70 with k=2,l=8 is 1-(1-0.49)^8 ≈ 0.9954.
 BENCH_CFG = dict(
@@ -71,6 +65,7 @@ BENCH_CFG = dict(
     max_bucket_size=500,
     shingle_hash="fast",
 )
+SCALING_TARGET = 0.8
 
 
 def _session(cpus: int):
@@ -80,9 +75,8 @@ def _session(cpus: int):
     # 2 shuffle tasks per core at BOTH parallelism levels (the engine's own
     # RuntimeConfig rule of thumb). With AQE the count is only a ceiling —
     # but a 1×-per-core ceiling makes every reduce stage straggler-bound:
-    # one hypervisor-stalled core holds 1/cpus of the stage hostage with
-    # nothing for the other cores to steal, which is exactly the regime the
-    # scaling measurement runs in on this shared host.
+    # one stalled core holds 1/cpus of the stage hostage with nothing for
+    # the other cores to steal.
     return get_spark(
         app_name=f"bench_local{cpus}",
         master=f"local[{cpus}]",
@@ -98,10 +92,8 @@ def _session(cpus: int):
 
 def _task_seconds(spark) -> float | None:
     """Cumulative executor task time (seconds) from the local REST status
-    API — the host-independent half of the scaling instrument. Wall-clock
-    measures the host's grant; task-seconds / wall = how many task slots
-    the ENGINE kept busy. If local[16] sustains ~16 while wall inflates,
-    the inefficiency is hypervisor steal, not the plan."""
+    API. Wall-clock measures the host's grant; task-seconds / wall = how
+    many task slots the ENGINE kept busy."""
     import urllib.request
 
     try:
@@ -144,16 +136,11 @@ def _ensure_corpus(spark, n_docs: int) -> str:
     return path
 
 
-def run_dedup_job(
-    spark, pages_path: str, stats_out: dict | None = None
-) -> tuple[int, float, float | None]:
+def run_dedup_job(spark, pages_path: str) -> tuple[int, float, float | None]:
     """The timed unit: read → shingle → sign → band → pairs → verify →
     cluster → count. Returns (n_pages, wall_seconds, achieved_concurrency)
     where achieved_concurrency = executor-task-seconds / wall-seconds over
-    the timed window (None when the status API is unavailable).
-    ``stats_out``, when given, is filled with run telemetry the endurance
-    record banks: connected-components path/iterations (pipe.cc_stats)
-    and peak executor memory from the status API."""
+    the timed window (None when the status API is unavailable)."""
     from lsh_qd_spark.config import DedupConfig
     from lsh_qd_spark.plans.pipeline import DedupPipeline
 
@@ -171,61 +158,7 @@ def run_dedup_job(
         if task_after is not None
         else None
     )
-    if stats_out is not None:
-        stats_out["cc"] = dict(pipe.cc_stats)
-        stats_out["peak_memory"] = _peak_executor_memory(spark)
     return n_pages, wall, conc
-
-
-def _peak_executor_memory(spark) -> dict | None:
-    """Best-effort executor memory snapshot from the local REST status
-    API: peak JVM heap + storage-memory usage across executors (one
-    'driver' executor in local mode). Observability for the endurance
-    record — never fails the bench."""
-    import urllib.request
-
-    try:
-        base = spark.sparkContext.uiWebUrl
-        if not base:
-            return None
-        with urllib.request.urlopen(f"{base}/api/v1/applications", timeout=5) as r:
-            apps = json.load(r)
-        app_id = apps[0]["id"]
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/executors", timeout=10
-        ) as r:
-            execs = json.load(r)
-        peak_heap = max(
-            (
-                (e.get("peakMemoryMetrics") or {}).get("JVMHeapMemory", 0)
-                for e in execs
-            ),
-            default=0,
-        )
-        return {
-            "peak_jvm_heap_bytes": peak_heap or None,
-            "max_storage_memory_bytes": max(
-                (e.get("maxMemory", 0) for e in execs), default=0
-            ),
-            "used_storage_memory_bytes": max(
-                (e.get("memoryUsed", 0) for e in execs), default=0
-            ),
-        }
-    except Exception:  # noqa: BLE001 — instrument, never fails the bench
-        return None
-
-
-# the per-query table measured by headline_queries and ratcheted into
-# best_scaling.json `queries_best` — the watcher keys its --queries-only
-# gate on this list (a name with no banked slot fires regardless of probe)
-HEADLINE_QUERY_NAMES = (
-    "exact_dup_clusters",
-    "token_totals",
-    "quality_scores",
-    "ann_cosine_topk",
-    "simhash_near_dup_prod",
-    "dedup_pipeline_prod",
-)
 
 
 def headline_queries(spark) -> dict[str, float]:
@@ -237,15 +170,17 @@ def headline_queries(spark) -> dict[str, float]:
     from lsh_qd_spark.plans.pipeline import DedupPipeline
 
     qs = entrymod.queries()
-    # first four come straight from the driver query registry; the two
-    # *_prod timings below are computed inline
-    chosen = list(HEADLINE_QUERY_NAMES[:4])
     # stream each finished timing into the watchdog's snapshot: a
     # mid-phase watchdog fire then still reports every completed query
     # instead of an empty dict
     times: dict[str, float] = _latest_payload.setdefault("queries", {})
     times.clear()
-    for name in chosen:
+    for name in (
+        "exact_dup_clusters",
+        "token_totals",
+        "quality_scores",
+        "ann_cosine_topk",
+    ):
         t0 = time.time()
         qs[name](spark, SF_DIR).count()
         times[name] = round(time.time() - t0, 3)
@@ -294,19 +229,15 @@ def headline_queries(spark) -> dict[str, float]:
     return times
 
 
-# N vs 4N parallelism pair for the scaling evidence. 4/16 rather than 8/32:
-# the sandbox shares its host (observed steal time up to ~13%), and a fully
-# saturated local[32] measures the neighbors, not the engine.
+# N vs 4N parallelism pair for the scaling measurement.
 SCALE_CPUS = tuple(
     int(x) for x in os.environ.get("SPARK_GRAFT_SCALE_CPUS", "4,16").split(",")
 )
 SCALE_TRIALS = int(os.environ.get("SPARK_GRAFT_SCALE_TRIALS", "3"))
-# Scaling rounds use the SAME corpus size as the headline. A smaller
-# corpus was tried (shorter rounds → more chances to catch a quiet host
-# window) and rejected: the job carries ~15 s of parallelism-independent
-# stage latency (shuffle setup, CC rounds), which is ~25% of a 4-thread
-# run but >50% of a 16-thread run at 1M pages — an Amdahl floor that caps
-# the measured ratio near 0.45 no matter how quiet the host is. At 3M
+# Scaling rounds use the SAME corpus size as the headline: the job carries
+# ~15 s of parallelism-independent stage latency (shuffle setup, CC
+# rounds), which is ~25% of a 4-thread run but >50% of a 16-thread run at
+# 1M pages — an Amdahl floor that caps the measured ratio near 0.45. At 3M
 # pages the fixed fraction is small and the ratio reflects the engine.
 SCALE_DOCS = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS", str(BENCH_DOCS)))
 
@@ -315,107 +246,6 @@ def _median(xs: list[float]) -> float:
     s = sorted(xs)
     m = len(s) // 2
     return s[m] if len(s) % 2 else (s[m - 1] + s[m]) / 2
-
-
-# --- host-weather probe -----------------------------------------------------
-# The sandbox VM shares a physical host. Hypervisor contention shows up as
-# steal time concentrated on high-parallelism windows (measured: ~20% of
-# demanded CPU stolen and ~7 of 16 requested cores effective during a bad
-# window, while a 4-thread job is barely touched) — which biases the
-# measured N→4N ratio strictly DOWNWARD and can make local[16] run slower
-# in wall-clock than local[4]. The probe quantifies the weather so each
-# scaling round records the instrument's state alongside the measurement.
-PROBE_THREADS = int(os.environ.get("SPARK_GRAFT_PROBE_THREADS", "16"))
-# wait for a usable window: ≥ PROBE_MIN_CORES effective before starting a
-# ~10-min round, re-probing every PROBE_WAIT_SEC (then run anyway — all
-# rounds + probes are reported either way). Round-2 lesson (VERDICT.md
-# "What's wrong #1"): per-round wait budgets compounded to ~60 min of
-# deliberate sleep and the driver's bench timed out with NO artifact.
-# The gate sleep is now budgeted CUMULATIVELY for the whole process
-# (default 120 s); raise SPARK_GRAFT_GATE_SLEEP_BUDGET only for manual
-# --scaling-only retries chasing a quiet window outside driver runs.
-PROBE_MIN_CORES = float(os.environ.get("SPARK_GRAFT_PROBE_MIN_CORES", "12"))
-PROBE_WAIT_SEC = int(os.environ.get("SPARK_GRAFT_PROBE_WAIT_SEC", "30"))
-GATE_SLEEP_BUDGET = int(os.environ.get("SPARK_GRAFT_GATE_SLEEP_BUDGET", "120"))
-_gate_sleep_spent = 0.0
-# (timestamp, serial_s) probe samples for the rolling serial floor
-_SERIAL_WINDOW: "deque[tuple[float, float]]" = deque()
-
-
-def weather_probe(n_threads: int = PROBE_THREADS) -> dict:
-    """Effective-parallel-capacity gauge: a fixed numpy work unit
-    (L2-resident arrays, GIL released inside numpy) timed once
-    single-threaded and then as ``n_threads`` concurrent copies.
-    ``effective_cores = n_threads * serial / parallel`` — on an idle
-    dedicated host this approaches ``n_threads``; under hypervisor
-    contention it reports the cores the host actually grants."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    import numpy as np
-
-    x = np.random.default_rng(0).random(400_000)
-
-    def unit() -> float:
-        acc = x
-        for _ in range(120):
-            acc = np.sqrt(x) * 1.0001 + acc * 0.5
-        return float(acc[0])
-
-    unit()  # warm (allocator, cpu governor)
-    # min-of-3: the serial leg is itself schedulable, and one starved run
-    # inflates `serial` and with it effective_cores (a >n_threads reading
-    # was observed when the single serial run got descheduled). min is
-    # correct here — we want the unit's true cost on a granted core.
-    serial = math.inf
-    for _ in range(3):
-        t0 = time.time()
-        unit()
-        serial = min(serial, time.time() - t0)
-    t0 = time.time()
-    with ThreadPoolExecutor(n_threads) as ex:
-        list(ex.map(lambda _: unit(), range(n_threads)))
-    par = time.time() - t0
-    # The unit's true single-core cost is a hardware constant (~0.25 s on
-    # this box); under heavy load ALL THREE serial runs can starve, and an
-    # inflated numerator overstates effective_cores (observed: serial 2.46
-    # → "9.8 cores" during a saturating local run). Clamp the numerator to
-    # the best serial seen in the last 30 min — a ROLLING window, not a
-    # process-lifetime min, so one anomalously fast turbo sample cannot
-    # permanently deflate the gauge in a long-lived watcher. The floor is
-    # recorded so effective_cores stays derivable from its own fields.
-    now = time.time()
-    _SERIAL_WINDOW.append((now, serial))
-    while _SERIAL_WINDOW and _SERIAL_WINDOW[0][0] < now - 1800:
-        _SERIAL_WINDOW.popleft()
-    floor = min(s for _, s in _SERIAL_WINDOW)
-    return {
-        "serial_s": round(serial, 3),
-        "floor_serial_s": round(floor, 3),
-        "parallel_s": round(par, 3),
-        "effective_cores": round(n_threads * floor / par, 1),
-    }
-
-
-def wait_for_weather() -> dict:
-    """Probe until the host grants ≥ PROBE_MIN_CORES effective cores or the
-    PROCESS-WIDE gate-sleep budget is spent (cumulative across every call —
-    a run can never sleep more than GATE_SLEEP_BUDGET seconds total, so the
-    gate cannot eat the driver's bench budget the way round 2's per-round
-    waits did). Returns the last probe + how long this call waited."""
-    global _gate_sleep_spent
-    waited = 0.0
-    while True:
-        p = weather_probe()
-        if (
-            p["effective_cores"] >= PROBE_MIN_CORES
-            or _gate_sleep_spent >= GATE_SLEEP_BUDGET
-        ):
-            p["waited_s"] = round(waited)
-            return p
-        step = min(PROBE_WAIT_SEC, GATE_SLEEP_BUDGET - _gate_sleep_spent)
-        time.sleep(step)
-        waited += step
-        _gate_sleep_spent += step
 
 
 def worker(
@@ -433,9 +263,9 @@ def worker(
     DedupPipeline(DedupConfig(**BENCH_CFG)).signatures_from_text(
         spark.read.parquet(path).limit(2000)
     ).count()
-    # median-of-N trials (round-1 verdict: min-of-N inflates the scaling
-    # ratio when the slow point is interference-bound; median is the
-    # believable central tendency on a shared host)
+    # median-of-N trials (min-of-N inflates the scaling ratio when the slow
+    # point is interference-bound; median is the believable central
+    # tendency on a shared host)
     secs: list[float] = []
     concs: list[float] = []
     n_pages = 0
@@ -460,10 +290,9 @@ def worker(
 
 def _pkg_zip() -> str:
     """Zip the ``lsh_qd_spark`` package for shipping to executor python
-    workers — the programmatic equivalent of ``spark-submit --py-files``
-    (the north rule's stated launch surface). Rebuilt on every call
-    (<100 ms) and swapped in atomically so an overlapping watcher run
-    never reads a half-written archive."""
+    workers — the programmatic equivalent of ``spark-submit --py-files``.
+    Rebuilt on every call (<100 ms) and swapped in atomically so a
+    concurrent caller never reads a half-written archive."""
     import zipfile
 
     path = "/tmp/lsh_qd_spark_pkg.zip"
@@ -487,11 +316,10 @@ def _pkg_zip() -> str:
 def _session_cluster(n_exec: int, cores: int, mem_mb: int):
     """SparkSession on ``local-cluster[n,cores,mem]`` — REAL separate
     executor JVMs (netty shuffle, cross-process serialization, per-executor
-    memory), not threads in the driver. The closest in-sandbox analog of
-    "N executors vs 4N executors" the north rule's scaling criterion is
-    phrased in. The package zip is added up front: executor python workers
-    import the pandas-UDF kernels by module reference, exactly as they
-    would from ``spark-submit --py-files`` on a real cluster."""
+    memory), not threads in the driver. The package zip is added up front:
+    executor python workers import the pandas-UDF kernels by module
+    reference, exactly as they would from ``spark-submit --py-files`` on a
+    real cluster."""
     from lsh_qd_spark.config import RuntimeConfig
     from lsh_qd_spark.session import get_spark
 
@@ -511,56 +339,11 @@ def _session_cluster(n_exec: int, cores: int, mem_mb: int):
     return spark
 
 
-def cluster_worker(
-    n_exec: int,
-    cores: int,
-    out_path: str,
-    n_trials: int | None = None,
-    n_docs: int | None = None,
-    mem_mb: int = 6144,
-) -> None:
-    """Fresh-JVM measurement on a multi-executor topology (mirrors
-    ``worker()`` but with real executor processes)."""
-    spark = _session_cluster(n_exec, cores, mem_mb)
-    path = _ensure_corpus(spark, n_docs or BENCH_DOCS)
-    from lsh_qd_spark.config import DedupConfig
-    from lsh_qd_spark.plans.pipeline import DedupPipeline
-
-    # warm-up outside the timed window: executor registration, python
-    # worker spawn, Arrow codepaths
-    DedupPipeline(DedupConfig(**BENCH_CFG)).signatures_from_text(
-        spark.read.parquet(path).limit(2000)
-    ).count()
-    secs: list[float] = []
-    concs: list[float] = []
-    n_pages = 0
-    for _ in range(n_trials or SCALE_TRIALS):
-        n_pages, s, conc = run_dedup_job(spark, path)
-        secs.append(s)
-        if conc is not None:
-            concs.append(conc)
-    with open(out_path, "w") as f:
-        json.dump(
-            {
-                "n_executors": n_exec,
-                "cores_per_executor": cores,
-                "n_pages": n_pages,
-                "sec": _median(secs),
-                "trials": secs,
-                "achieved_concurrency": _median(concs) if concs else None,
-            },
-            f,
-        )
-    spark.stop()
-
-
 # Worker children in flight right now. Each worker python owns a JVM
-# grandchild (local[N] gateway or local-cluster executors), so a plain
-# subprocess kill — what subprocess.run's timeout does, and what the
-# watchdog's os._exit implicitly abandons — leaves that JVM thrashing the
-# host through the driver's NEXT phases (correctness run, entry smoke).
-# Workers therefore run as their own process-group leaders and both kill
-# paths reap the whole group.
+# grandchild, so a plain subprocess kill — what subprocess.run's timeout
+# does, and what the watchdog's os._exit implicitly abandons — leaves that
+# JVM running after the bench is gone. Workers therefore run as their own
+# process-group leaders and every kill path reaps the whole group.
 _live_children: list[subprocess.Popen] = []
 
 
@@ -603,48 +386,15 @@ def _run_child(cmd: list[str], timeout: int = 1500) -> subprocess.CompletedProce
     return subprocess.CompletedProcess(cmd, proc.returncode, out, err)
 
 
-def _run_cluster_worker(
-    n_exec: int, cores: int, n_docs: int, mem_mb: int = 6144
-) -> dict:
-    """Child-process launch of ``cluster_worker`` (fresh JVM per leg, same
-    discipline as ``_run_worker``)."""
-    out_path = f"/tmp/lsh_qd_bench_cluster_{n_exec}x{cores}.json"
-    cmd = [
-        sys.executable,
-        os.path.abspath(__file__),
-        "--cluster-worker",
-        str(n_exec),
-        str(cores),
-        out_path,
-        "1",
-        str(n_docs),
-        str(mem_mb),
-    ]
-    proc = _run_child(cmd)
-    if proc.returncode != 0:
-        sys.stderr.write(proc.stderr.decode()[-2000:])
-        raise RuntimeError(
-            f"cluster worker local-cluster[{n_exec},{cores}] failed"
-        )
-    with open(out_path) as f:
-        return json.load(f)
-
-
 def _run_worker(
-    cpus: int,
-    n_trials: int | None = None,
-    n_docs: int | None = None,
-    tag: str = "",
+    cpus: int, n_trials: int | None = None, n_docs: int | None = None
 ) -> dict:
     """Fresh-JVM measurement at a given parallelism: warm-up outside the
-    timed window, median of SCALE_TRIALS (or one trial for the interleaved
-    scaling protocol). One discipline for headline and scaling runs
-    (round 1's single cold in-session headline was 7x off the worker rate
-    — VERDICT.md 'Performance' — so everything goes through here now).
-    ``tag`` separates output files for non-standard corpora (the
-    within-grant fallback pair) so the trials table never mixes corpus
-    sizes."""
-    out_path = f"{SCALE_TMP_DIR}/lsh_qd_bench_scale_{cpus}{tag}.json"
+    timed window, median of SCALE_TRIALS (or ``n_trials``). One discipline
+    for headline and scaling runs."""
+    out_path = os.path.join(
+        tempfile.gettempdir(), f"lsh_qd_bench_{os.getpid()}_{cpus}.json"
+    )
     cmd = [sys.executable, os.path.abspath(__file__), "--worker", str(cpus), out_path]
     if n_docs and not n_trials:
         # the worker protocol is positional (trials then docs): silently
@@ -660,26 +410,21 @@ def _run_worker(
         sys.stderr.write(proc.stderr.decode()[-2000:])
         raise RuntimeError(f"bench worker local[{cpus}] failed")
     with open(out_path) as f:
-        return json.load(f)
+        result = json.load(f)
+    os.remove(out_path)
+    return result
 
 
 def run_scaling(deadline: float | None = None) -> dict:
-    """N vs 4N throughput, drift-robust:
+    """N vs 4N throughput from this run's rounds:
 
     - Trials are INTERLEAVED in time (N,4N,N,4N,…): the shared host's load
       drifts on a minutes scale, so running all N trials then all 4N
       trials lets one noisy window land entirely on one level and
       fabricate (or destroy) the ratio.
     - Efficiency is the median of PER-ROUND ratios (each round's adjacent
-      N,4N pair shares the same weather), not the ratio of pooled medians
-      — a single saturated round then cannot dominate.
-    - Hypervisor steal throttles a 16-thread job proportionally harder
-      than a 4-thread one (it needs 4x the free cores), biasing the
-      measured ratio strictly DOWN. Bad-weather rounds are NOT retried
-      in-process (round 2's retry loop compounded with the gate sleeps
-      and timed the driver bench out); quiet windows are chased between
-      driver runs via --scaling-only, and the best honestly-gated round
-      is persisted in BENCH/best_scaling.json either way.
+      N,4N pair shares the same host load), not the ratio of pooled
+      medians — a single saturated round then cannot dominate.
     - ``deadline`` (epoch seconds) bounds the phase: a new round starts
       only if the previous round's duration fits before the deadline, so
       the process always exits with whatever rounds completed.
@@ -688,42 +433,12 @@ def run_scaling(deadline: float | None = None) -> dict:
     trials: dict[int, list[float]] = {c: [] for c in SCALE_CPUS}
     concs: dict[int, list[float]] = {c: [] for c in SCALE_CPUS}
     ratios: list[float] = []
-    probes: list[dict] = []
-    n_pages = BENCH_DOCS
+    n_pages = SCALE_DOCS
 
-    def one_round() -> None:
-        nonlocal n_pages
-        secs = {}  # trials[] updated only after BOTH legs succeed — a
-        # failed 4N leg must not leave an orphan N measurement skewing
-        # the reported medians for a round that produced no ratio
-        round_concs = {}
-        round_probe = None
-        for cpus in SCALE_CPUS:
-            if cpus == n4:
-                # Gate the 4N worker specifically: the N-thread worker is
-                # weather-insensitive (the host grants ~4 cores even under
-                # contention), but the 4N worker needs a full quiet window
-                # — and the weather flips on a minutes scale, so probing at
-                # round start is stale by the time the N worker finishes.
-                # The wait draws on the process-wide GATE_SLEEP_BUDGET;
-                # the probe value ships with the round either way so a
-                # forced bad-window round is visible in the data.
-                round_probe = wait_for_weather()
-            r = _run_worker(cpus, n_trials=1, n_docs=SCALE_DOCS)
-            secs[cpus] = r["sec"]
-            round_concs[cpus] = r.get("achieved_concurrency")
-            n_pages = r["n_pages"]
-        for cpus in SCALE_CPUS:
-            trials[cpus].append(secs[cpus])
-            if round_concs.get(cpus) is not None:
-                concs[cpus].append(round_concs[cpus])
-        probes.append(round_probe or weather_probe())
-        ratios.append((secs[n] / secs[n4]) / (n4 / n))
-
-    def _snapshot() -> dict:
-        """The scaling dict as it would be reported if the run ended NOW
-        — medians over the rounds completed so far."""
+    def snapshot() -> dict:
+        """The scaling dict over the rounds completed so far."""
         n_sec, n4_sec = _median(trials[n]), _median(trials[n4])
+        eff = round(_median(ratios), 3)
         return {
             "n_pages": n_pages,
             "cpus_n": n,
@@ -732,19 +447,16 @@ def run_scaling(deadline: float | None = None) -> dict:
             "4n_sec": round(n4_sec, 2),
             "n_pages_per_sec": round(n_pages / n_sec, 1),
             "4n_pages_per_sec": round(n_pages / n4_sec, 1),
-            "scaling_efficiency_n_to_4n": round(_median(ratios), 3),
+            "scaling_efficiency_n_to_4n": eff,
+            "target": SCALING_TARGET,
+            "target_met": eff >= SCALING_TARGET,
             "round_ratios": [round(r, 3) for r in ratios],
-            "round_probes": probes,
-            # raw per-level trials travel IN the payload (the /tmp worker
-            # files BASELINE.md's trials table reads are wiped on host
-            # reboot, which silently emptied the table once)
             "n_trials": [round(t, 2) for t in trials[n]],
             "4n_trials": [round(t, 2) for t in trials[n4]],
             # achieved task concurrency (executor-task-sec / wall-sec,
-            # median across rounds): the host-independent scaling
-            # instrument — ~cpus at both levels means the ENGINE filled
-            # every granted slot and any wall-clock ratio shortfall is
-            # the host's grant, not the plan
+            # median across rounds): ~cpus at both levels means the ENGINE
+            # filled every granted slot and any wall-clock ratio shortfall
+            # is the host's grant, not the plan
             "n_achieved_concurrency": (
                 round(_median(concs[n]), 2) if concs[n] else None
             ),
@@ -756,21 +468,25 @@ def run_scaling(deadline: float | None = None) -> dict:
     for i in range(SCALE_TRIALS):
         t_round = time.time()
         try:
-            one_round()
+            # both legs must succeed before the round counts: a failed 4N
+            # leg must not leave an orphan N measurement in the medians
+            legs = {
+                c: _run_worker(c, n_trials=1, n_docs=SCALE_DOCS)
+                for c in SCALE_CPUS
+            }
         except (RuntimeError, subprocess.TimeoutExpired) as e:
             sys.stderr.write(f"scaling round {i} failed: {e}\n")
             if not ratios:
                 raise
             break
-        # ratchet EVERY completed round, not only at phase end: the
-        # driver's _preempt_foreign_benches SIGTERMs an in-flight watcher
-        # attempt, and an end-of-phase-only ratchet would discard the
-        # quiet-window rounds the watch exists to catch (the preemption
-        # comment promises per-round persistence — this makes it true)
-        try:
-            update_best_scaling(_snapshot())
-        except Exception as e:  # never let ratcheting kill the phase
-            sys.stderr.write(f"per-round ratchet failed: {e}\n")
+        for c, r in legs.items():
+            trials[c].append(r["sec"])
+            if r.get("achieved_concurrency") is not None:
+                concs[c].append(r["achieved_concurrency"])
+        n_pages = legs[n]["n_pages"]
+        ratios.append((legs[n]["sec"] / legs[n4]["sec"]) / (n4 / n))
+        # a watchdog fire during a later round still reports this one
+        _latest_payload["scaling"] = snapshot()
         round_cost = time.time() - t_round
         if (
             deadline is not None
@@ -782,1275 +498,149 @@ def run_scaling(deadline: float | None = None) -> dict:
                 f"reporting {len(ratios)} round(s)\n"
             )
             break
-
-    results = {}
-    for cpus in SCALE_CPUS:
-        results[cpus] = {
-            "cpus": cpus,
-            "n_pages": n_pages,
-            "sec": _median(trials[cpus]),
-            "trials": trials[cpus],
-        }
-        # persist aggregated per-level results for the BASELINE.md table
-        with open(f"{SCALE_TMP_DIR}/lsh_qd_bench_scale_{cpus}.json", "w") as f:
-            json.dump(results[cpus], f)
-    out = _snapshot()
-    # Within-grant fallback pair: when EVERY primary round ran under a bad
-    # grant (host giving < PROBE_MIN_CORES of the 4N request), the 4→16
-    # ratio measures the hypervisor, not the engine. Measure one round of
-    # a pair that FITS the observed grant (1→4 cores — a ~5-core grant
-    # covers it) so the artifact still carries an engine-scaling number
-    # with honest provenance. Smaller corpus keeps the 1-core leg bounded;
-    # it is reported under its own key and ratchets into best_scaling.json's
-    # per-pair within_grant_best slot (where the lexicographic corpus-size
-    # ordering keeps a 1M-page fallback from displacing a 3M-page record).
-    all_bad = all(
-        p.get("effective_cores", 0) < PROBE_MIN_CORES for p in probes
-    )
-    if all_bad and (deadline is None or time.time() + 420 < deadline):
-        try:
-            fb_docs = int(
-                os.environ.get("SPARK_GRAFT_FALLBACK_DOCS", "1000000")
-            )
-            fn, f4 = 1, 4
-            r1 = _run_worker(fn, n_trials=1, n_docs=fb_docs, tag="_wg")
-            r4 = _run_worker(f4, n_trials=1, n_docs=fb_docs, tag="_wg")
-            out["within_grant"] = {
-                "note": (
-                    "pair sized to fit the observed host grant; see probes"
-                ),
-                "n_pages": fb_docs,
-                "cpus_n": fn,
-                "cpus_4n": f4,
-                "n_sec": round(r1["sec"], 2),
-                "4n_sec": round(r4["sec"], 2),
-                "scaling_efficiency_n_to_4n": round(
-                    (r1["sec"] / r4["sec"]) / (f4 / fn), 3
-                ),
-                "n_achieved_concurrency": r1.get("achieved_concurrency"),
-                "4n_achieved_concurrency": r4.get("achieved_concurrency"),
-                "probe": weather_probe(),
-            }
-        except (RuntimeError, subprocess.TimeoutExpired) as e:
-            sys.stderr.write(f"within-grant fallback failed: {e}\n")
-    return out
-
-
-BEST_SCALING_PATH = os.path.join(REPO, "BENCH", "best_scaling.json")
-# best_scaling.json compares like with like: only runs over the standard
-# scaling corpus are eligible (a smoke run at 200k pages has a different
-# Amdahl floor and would record a meaningless "best"). Change the standard
-# → delete the file.
-STANDARD_SCALE_DOCS = 3_000_000
-# headline_best compares like with like too: only local[STANDARD_CPUS]
-# runs over the standard corpus are eligible (a SPARK_GRAFT_CPUS override
-# measures a different machine shape, not a better engine)
-STANDARD_CPUS = 32
-
-
-def _locked_best(mutate) -> dict | None:
-    """Serialize a read-modify-write of best_scaling.json under flock —
-    driver rounds and watcher-spawned attempts can overlap, and without
-    the lock a slower concurrent run could overwrite a better best
-    recorded in between. ``mutate(best) -> bool`` edits the store dict in
-    place and returns whether anything changed; the file is rewritten
-    only then. Returns the (possibly updated) store, or None when
-    nothing exists on disk and nothing was recorded. Shared by every
-    ratchet slot — the earlier per-slot copies of this boilerplate
-    drifted (one forgot the summary refresh downstream)."""
-    import fcntl
-
-    os.makedirs(os.path.dirname(BEST_SCALING_PATH), exist_ok=True)
-    with open(BEST_SCALING_PATH + ".lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        exists = os.path.exists(BEST_SCALING_PATH)
-        best: dict = {}
-        if exists:
-            with open(BEST_SCALING_PATH) as f:
-                best = json.load(f)
-        if mutate(best):
-            with open(BEST_SCALING_PATH, "w") as f:
-                json.dump(best, f, indent=2)
-            return best
-        return best if exists else None
-
-
-def _refresh_payload_md() -> None:
-    """Refresh the BENCH/payload.json cache with the ratcheted bests on
-    disk (scaling_best_recorded + its summary + headline_best_recorded),
-    then regenerate BASELINE.md. Shared by
-    every standalone attempt (--wg-only, --headline-only, --queries-only,
-    --cluster-sim) so a ratcheted record ships in the next driver
-    artifact; the summary is ALWAYS recomputed from the same store the
-    slots are read from, so the MET/not-met headline can't contradict
-    the slot paragraphs below it."""
-    cache = os.path.join(REPO, "BENCH", "payload.json")
-    if not os.path.exists(cache):
-        return
-    with open(cache) as f:
-        payload = json.load(f)
-    payload["scaling_best_recorded"] = update_best_scaling(None)
-    payload["scaling_best_summary"] = _scaling_summary(
-        payload["scaling_best_recorded"]
-    )
-    payload["headline_best_recorded"] = update_best_headline(None)
-    with open(cache, "w") as f:
-        json.dump(payload, f, indent=2)
-    write_bench_md(payload)
-
-
-def update_best_scaling(s: dict | None) -> dict | None:
-    """Persist the best scaling measurement seen across ALL runs (driver
-    rounds and manual --scaling-only retries alike) so a quiet-window catch
-    ships in the next driver artifact instead of living only in prose.
-    Every candidate carries its per-round weather probes — the number is
-    only as honest as its recorded granted-cores context, which is why the
-    probes are stored alongside, not summarized away."""
-
-    def mutate(best: dict) -> bool:
-        now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        dirty = False
-        # the within-grant pair (sized to FIT the host's granted cores) is
-        # ratcheted independently of the primary 4->16 pair: a contended
-        # run can carry the best within-grant evidence and vice versa.
-        # Each cpu pair gets its OWN slot (1->4 in the legacy key,
-        # 2->8 etc. suffixed) — a 2->8 pair at lower efficiency is not
-        # comparable to a 1->4 pair, it is separate (stronger-parallelism)
-        # evidence and must not be gated by the 1->4 record.
-        cand_wg = (s or {}).get("within_grant")
-        if cand_wg and cand_wg.get("scaling_efficiency_n_to_4n") is not None:
-            pair = (cand_wg.get("cpus_n", 1), cand_wg.get("cpus_4n", 4))
-            wg_slot = (
-                "within_grant_best"
-                if pair == (1, 4)
-                else f"within_grant_best_{pair[0]}x{pair[1]}"
-            )
-            prev_wg = best.get(wg_slot)
-            # lexicographic (corpus size, efficiency): a larger-corpus
-            # measurement has a LOWER Amdahl floor (fixed stage latency is
-            # a smaller fraction of the run), so it is strictly stronger
-            # evidence — a 3M-page 0.8 beats a 1M-page 0.9
-            if prev_wg is None or (
-                cand_wg.get("n_pages", 0),
-                cand_wg["scaling_efficiency_n_to_4n"],
-            ) > (
-                prev_wg.get("n_pages", 0),
-                prev_wg["scaling_efficiency_n_to_4n"],
-            ):
-                best[wg_slot] = dict(cand_wg, recorded_at=now)
-                dirty = True
-        if (
-            s
-            and s.get("scaling_efficiency_n_to_4n") is not None
-            and s.get("n_pages") == STANDARD_SCALE_DOCS
-        ):
-            if (
-                best.get("scaling_efficiency_n_to_4n") is None
-                or s["scaling_efficiency_n_to_4n"]
-                > best["scaling_efficiency_n_to_4n"]
-            ):
-                keep = {
-                    k: v
-                    for k, v in best.items()
-                    if k.startswith(
-                        (
-                            "within_grant_best",
-                            "headline_best",
-                            "cluster_sim_best",
-                            "queries_best",
-                            "endurance_best",
-                        )
-                    )
-                }
-                best.clear()
-                best.update(s)
-                best.pop("within_grant", None)
-                best.update(keep)
-                best["recorded_at"] = now
-                dirty = True
-        return dirty
-
-    return _locked_best(mutate)
-
-
-def update_best_headline(rec: dict | None) -> dict | None:
-    """Ratchet the best headline dedup throughput (standard corpus,
-    local[CPUS]) into best_scaling.json under ``headline_best`` — same
-    rationale as the scaling ratchet: the driver samples one weather
-    window per round, and the engine's demonstrated ceiling should ship
-    in the artifact with its probe context, not live in prose."""
-
-    def mutate(best: dict) -> bool:
-        prev = best.get("headline_best")
-        if (
-            rec
-            and rec.get("pages_per_sec")
-            and rec.get("n_pages") == STANDARD_SCALE_DOCS
-            and rec.get("cpus") == STANDARD_CPUS
-            and (
-                prev is None
-                or rec["pages_per_sec"] > prev.get("pages_per_sec", 0)
-            )
-        ):
-            now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-            best["headline_best"] = dict(rec, recorded_at=now)
-            return True
-        return False
-
-    return (_locked_best(mutate) or {}).get("headline_best")
-
-
-def within_grant_only(
-    n_docs: int, rounds: int = 3, cpus: tuple[int, int] = (1, 4)
-) -> dict:
-    """Standalone within-grant measurement (``--wg-only [n_docs] [N:4N]``):
-    interleaved local[N]/local[4N] rounds over ``n_docs`` pages with the
-    same fresh-JVM/median discipline as the primary pair. The pair is
-    sized to fit the cores the host actually grants (default 1→4 for a
-    ≥ 4-core grant; 2→8 when the grant reaches ~8) so it measures the
-    engine where the contended 4→16 pair measures the hypervisor. The
-    result ratchets into best_scaling.json (per cpu-pair slot,
-    lexicographic corpus-size then efficiency) and refreshes BASELINE.md
-    from the payload cache."""
-    lo, hi = cpus
-    if hi != 4 * lo:
-        raise ValueError(f"pair must be N:4N, got {lo}:{hi}")
-    spark = _session(4)
-    _ensure_corpus(spark, n_docs)
-    spark.stop()
-    ratios, probes, r1s, r4s = [], [], [], []
-    c1s, c4s = [], []
-    # Same deadline discipline as the cluster-sim path: the watcher's
-    # outer kill (subprocess timeout) discards EVERYTHING, so on a slow
-    # host we must stop starting new rounds early enough to exit and
-    # ratchet the completed ones ourselves. (No per-round prefix
-    # ratcheting: a lucky 1-round prefix must not outrank the honest
-    # full-run median in the same slot.)
-    deadline = time.time() + int(
-        os.environ.get("SPARK_GRAFT_BENCH_DEADLINE", "3000")
-    )
-    for i in range(rounds):
-        t_round = time.time()
-        # per-round fault isolation (run_scaling's discipline): a failed
-        # leg in round 3 must not discard rounds 1-2 of a rare window
-        probe = weather_probe()
-        try:
-            r1 = _run_worker(lo, n_trials=1, n_docs=n_docs, tag="_wg")
-            r4 = _run_worker(hi, n_trials=1, n_docs=n_docs, tag="_wg")
-        except (RuntimeError, subprocess.TimeoutExpired) as e:
-            sys.stderr.write(f"within-grant round {i} failed: {e}\n")
-            if not ratios:
-                raise
-            break
-        probes.append(probe)
-        r1s.append(r1["sec"])
-        r4s.append(r4["sec"])
-        for rr, acc in ((r1, c1s), (r4, c4s)):
-            if rr.get("achieved_concurrency") is not None:
-                acc.append(rr["achieved_concurrency"])
-        ratios.append((r1["sec"] / r4["sec"]) / (hi / lo))
-        round_cost = time.time() - t_round
-        if i + 1 < rounds and time.time() + round_cost > deadline:
-            sys.stderr.write(
-                f"within-grant: deadline reached after round {i + 1}; "
-                f"reporting {len(ratios)} round(s)\n"
-            )
-            break
-    wg = {
-        "note": (
-            f"standalone within-grant pair (--wg-only); fits a "
-            f"≥{hi}-core grant"
-        ),
-        "n_pages": n_docs,
-        "cpus_n": lo,
-        "cpus_4n": hi,
-        "n_sec": round(_median(r1s), 2),
-        "4n_sec": round(_median(r4s), 2),
-        "scaling_efficiency_n_to_4n": round(_median(ratios), 3),
-        "round_ratios": [round(r, 3) for r in ratios],
-        "round_probes": probes,
-        "n_achieved_concurrency": _median(c1s) if c1s else None,
-        "4n_achieved_concurrency": _median(c4s) if c4s else None,
-    }
-    update_best_scaling({"within_grant": wg})
-    _refresh_payload_md()
-    print(json.dumps(wg))
-    return wg
-
-
-def headline_only() -> dict:
-    """Standalone headline-throughput attempt (``--headline-only``): one
-    fresh-JVM local[CPUS] dedup run over the standard corpus with a PRE-run
-    weather probe, ratcheted into best_scaling.json ``headline_best`` (only
-    if it beats the stored record; the ratchet's standard-corpus and
-    standard-cpus gates apply). Cheap (~1–3 min in a quiet window) — the
-    watcher fires it whenever the host grant could plausibly beat the
-    recorded best, so the probe-attached headline record improves between
-    driver runs the same way the scaling record does."""
-    probe = weather_probe()
-    r = _run_worker(CPUS, n_trials=1)  # worker ensures the corpus itself
-    rec = {
-        "pages_per_sec": round(r["n_pages"] / r["sec"], 1),
-        "sec": round(r["sec"], 2),
-        "n_pages": r["n_pages"],
-        "cpus": CPUS,
-        "probe": probe,
-        "achieved_concurrency": r.get("achieved_concurrency"),
-    }
-    best = update_best_headline(rec)
-    # refresh the payload cache + BASELINE.md ONLY when the ratchet fired:
-    # update_best_headline returns the stored best either way, and a
-    # non-ratcheting attempt regenerating the md would clobber the trials
-    # table with this attempt's (worse-window) numbers. "Fired" = the
-    # stored record now carries exactly this attempt's values (recorded_at
-    # aside) — value-equality is race-free where the previous recorded_at
-    # comparison missed same-second ratchets and raced a concurrent
-    # attempt landing between two separately-locked reads.
-    ratcheted = best is not None and all(
-        best.get(k) == v for k, v in rec.items()
-    )
-    if ratcheted:
-        _refresh_payload_md()
-    print(json.dumps(rec))
-    return rec
-
-
-def update_best_endurance(rec: dict | None) -> dict | None:
-    """Ratchet the endurance record (the ≥ 10M-page end-to-end dedup at
-    local[CPUS]) into best_scaling.json under ``endurance_best`` —
-    lexicographic (n_pages, pages_per_sec): a larger-corpus completion is
-    strictly stronger endurance evidence than a faster smaller one."""
-
-    def mutate(best: dict) -> bool:
-        if not rec or rec.get("pages_per_sec") is None:
-            return False
-        prev = best.get("endurance_best")
-        if prev is None or (
-            rec.get("n_pages", 0),
-            rec["pages_per_sec"],
-        ) > (prev.get("n_pages", 0), prev.get("pages_per_sec", 0)):
-            best["endurance_best"] = dict(
-                rec,
-                recorded_at=time.strftime(
-                    "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                ),
-            )
-            return True
-        return False
-
-    return (_locked_best(mutate) or {}).get("endurance_best")
-
-
-def endurance_only(n_docs: int = 10_000_000) -> dict:
-    """Standalone endurance run (``--endurance [n_docs]``, VERDICT r4 #5):
-    ONE end-to-end dedup pass over a ≥ 10M-page corpus at local[CPUS] —
-    3x the standard bench corpus — evidencing the 100x story with memory
-    headroom, skew behavior, and connected-components iteration count at
-    a scale where a quadratic pair explosion or an unconverging CC loop
-    would be unmissable. Weather probe attached; ratchets into
-    best_scaling.json ``endurance_best`` and refreshes BASELINE.md when
-    the ratchet fires. Single trial by design: the value of the record is
-    that the full pass COMPLETES with bounded memory at this scale, not
-    its central tendency (pages/sec context comes from the probe)."""
-    probe = weather_probe()
-    spark = _session(CPUS)
-    path = _ensure_corpus(spark, n_docs)
-    # warm JVM + python UDF workers outside the timed window (worker()'s
-    # discipline)
-    from lsh_qd_spark.config import DedupConfig
-    from lsh_qd_spark.plans.pipeline import DedupPipeline
-
-    DedupPipeline(DedupConfig(**BENCH_CFG)).signatures_from_text(
-        spark.read.parquet(path).limit(2000)
-    ).count()
-    stats: dict = {}
-    n_pages, wall, conc = run_dedup_job(spark, path, stats_out=stats)
-    spark.stop()
-    rec = {
-        "n_pages": n_pages,
-        "sec": round(wall, 2),
-        "pages_per_sec": round(n_pages / wall, 1),
-        "cpus": CPUS,
-        "achieved_concurrency": conc,
-        "probe": probe,
-        "cc": stats.get("cc"),
-        "peak_memory": stats.get("peak_memory"),
-        "note": (
-            "single-trial endurance pass (completion + memory headroom + "
-            "CC convergence at 3x the bench corpus); same fresh-session "
-            "warm-up discipline as the scaling workers"
-        ),
-    }
-    best = update_best_endurance(rec)
-    if best is not None and best.get("sec") == rec["sec"] and best.get(
-        "n_pages"
-    ) == rec["n_pages"]:
-        _refresh_payload_md()
-    print(json.dumps(rec))
-    return rec
-
-
-def update_best_queries(
-    times: dict | None, probe: dict | None
-) -> dict:
-    """Ratchet per-query best seconds (headline-query table, standard
-    sf dir, local[STANDARD_CPUS]) into best_scaling.json under
-    ``queries_best`` — same rationale as ``headline_best``: the driver
-    samples ONE weather window per round, and a trivial narrow-plan query
-    like exact_dup_clusters swinging 7→13 s across rounds is host steal,
-    not a plan change (plan audit pins the plans). The ratcheted row is
-    the engine's demonstrated per-query ceiling with its probe context.
-    Only standard-config runs ratchet; returns the stored slot."""
-    standard = CPUS == STANDARD_CPUS and SF_DIR.rstrip("/").endswith(
-        "sf0.1"
-    )
-
-    def mutate(best: dict) -> bool:
-        if not (times and standard):
-            return False
-        qb = best.setdefault("queries_best", {})
-        now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        dirty = False
-        for name, sec in times.items():
-            prev = qb.get(name)
-            if sec is not None and (
-                prev is None or sec < prev.get("sec", float("inf"))
-            ):
-                qb[name] = {
-                    "sec": sec,
-                    "cpus": CPUS,
-                    "probe": probe,
-                    "recorded_at": now,
-                }
-                dirty = True
-        return dirty
-
-    return (_locked_best(mutate) or {}).get("queries_best") or {}
-
-
-def queries_only() -> dict:
-    """Standalone headline-queries attempt (``--queries-only``): rerun the
-    per-query table over the sf dir with a PRE-run weather probe and
-    ratchet per-query bests into best_scaling.json. Cheap (~1 min in a
-    quiet window) — clears the weather-correlated regressions on trivial
-    queries without paying a full bench."""
-    probe = weather_probe()
-    spark = _session(CPUS)
-    try:
-        times = headline_queries(spark)
-    finally:
-        spark.stop()
-    qb = update_best_queries(times, probe)
-    # regenerate BASELINE.md so the ratcheted table ships (reads the best
-    # slots from disk via the payload cache refresh path)
-    _refresh_payload_md()
-    print(json.dumps({"queries": times, "probe": probe}))
-    return qb
-
-
-def update_best_cluster_sim(rec: dict | None) -> dict:
-    """Ratchet the best multi-executor (local-cluster) scaling pair into
-    best_scaling.json — one slot per (executors_n, executors_4n, cores)
-    topology, lexicographic (corpus size, efficiency) like the within-grant
-    slots. Returns the cluster_sim slots currently on disk."""
-
-    def mutate(best: dict) -> bool:
-        if rec and rec.get("scaling_efficiency_n_to_4n") is not None:
-            slot = (
-                f"cluster_sim_best_{rec['executors_n']}x"
-                f"{rec['executors_4n']}c{rec['cores_per_executor']}"
-            )
-            prev = best.get(slot)
-            if prev is None or (
-                rec.get("n_pages", 0),
-                rec["scaling_efficiency_n_to_4n"],
-            ) > (
-                prev.get("n_pages", 0),
-                prev["scaling_efficiency_n_to_4n"],
-            ):
-                now = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-                best[slot] = dict(rec, recorded_at=now)
-                return True
-        return False
-
-    best = _locked_best(mutate) or {}
-    return {k: v for k, v in best.items() if k.startswith("cluster_sim")}
-
-
-def cluster_sim_only(
-    n_docs: int,
-    rounds: int = 3,
-    execs: tuple[int, int] = (1, 4),
-    cores: int = 2,
-    mem_mb: int = 6144,
-) -> dict:
-    """Standalone multi-executor scaling measurement
-    (``--cluster-sim [n_docs] [N:4N] [cores]``): the dedup job on
-    ``local-cluster[N,cores,mem]`` vs ``local-cluster[4N,cores,mem]`` —
-    real separate executor JVMs, the literal "N and 4N executors" shape of
-    the north rule, where the primary pair proxies executors with driver
-    threads. Interleaved rounds, per-round probes, fresh JVM per leg, and
-    the package shipped to executors as a zip (the --py-files surface).
-    Ratchets into best_scaling.json under ``cluster_sim_best_*``."""
-    lo, hi = execs
-    if hi != 4 * lo:
-        raise ValueError(f"executor pair must be N:4N, got {lo}:{hi}")
-    spark = _session(4)
-    _ensure_corpus(spark, n_docs)
-    spark.stop()
-    ratios, probes, r1s, r4s = [], [], [], []
-    c1s, c4s = [], []
-    # deadline + per-round fault isolation (run_scaling's discipline):
-    # these runs chase rare quiet windows, so a timed-out round-3 leg or
-    # an overrun toward the watcher's outer kill must not discard rounds
-    # 1-2 — exit with whatever rounds completed and ratchet THAT median.
-    # (No per-round prefix ratcheting: a lucky 1-round prefix must not
-    # outrank the honest full-run median in the same slot.)
-    deadline = time.time() + int(
-        os.environ.get("SPARK_GRAFT_BENCH_DEADLINE", "3000")
-    )
-    for i in range(rounds):
-        t_round = time.time()
-        probe = weather_probe()
-        try:
-            r1 = _run_cluster_worker(lo, cores, n_docs, mem_mb)
-            r4 = _run_cluster_worker(hi, cores, n_docs, mem_mb)
-        except (RuntimeError, subprocess.TimeoutExpired) as e:
-            sys.stderr.write(f"cluster-sim round {i} failed: {e}\n")
-            if not ratios:
-                raise
-            break
-        probes.append(probe)
-        r1s.append(r1["sec"])
-        r4s.append(r4["sec"])
-        for rr, acc in ((r1, c1s), (r4, c4s)):
-            if rr.get("achieved_concurrency") is not None:
-                acc.append(rr["achieved_concurrency"])
-        ratios.append((r1["sec"] / r4["sec"]) / (hi / lo))
-        round_cost = time.time() - t_round
-        if i + 1 < rounds and time.time() + round_cost > deadline:
-            sys.stderr.write(
-                f"cluster-sim: deadline reached after round {i + 1}; "
-                f"reporting {len(ratios)} round(s)\n"
-            )
-            break
-    rec = {
-        "note": (
-            "multi-executor pair (--cluster-sim): local-cluster "
-            "topology, separate executor JVMs, package shipped via "
-            "py-files zip"
-        ),
-        "n_pages": n_docs,
-        "executors_n": lo,
-        "executors_4n": hi,
-        "cores_per_executor": cores,
-        "n_sec": round(_median(r1s), 2),
-        "4n_sec": round(_median(r4s), 2),
-        "scaling_efficiency_n_to_4n": round(_median(ratios), 3),
-        "round_ratios": [round(r, 3) for r in ratios],
-        "round_probes": probes,
-        "n_achieved_concurrency": _median(c1s) if c1s else None,
-        "4n_achieved_concurrency": _median(c4s) if c4s else None,
-    }
-    update_best_cluster_sim(rec)
-    # refresh the payload cache + BASELINE.md so a ratcheted record ships
-    # in the next driver artifact (same pattern as --wg-only)
-    _refresh_payload_md()
-    print(json.dumps(rec))
-    return rec
+    return snapshot()
 
 
 def _trial_rows(
     s: dict | None = None, payload: dict | None = None
 ) -> list[str]:
-    """Raw per-parallelism trials, PAYLOAD-FIRST: the table must describe
-    the same measurements the rest of BASELINE.md reports, so trials
-    embedded in the payload (scaling ``n_trials``/``4n_trials``, headline
-    ``headline_trials``) take precedence. The /tmp worker files fill only
-    levels the payload lacks — they are overwritten by every standalone
-    attempt (``--headline-only``, watcher runs), so reading them first
-    desynchronized the table from the payload's medians."""
-    rows: dict[int, str] = {}
+    """Raw trials of this run, one row per phase and parallelism: the
+    scaling legs and the headline worker, ordered by parallelism."""
+    rows: list[tuple[int, str]] = []
 
-    def put(cpus, ts):
-        if ts and cpus is not None and cpus not in rows:
+    def put(phase, cpus, ts):
+        if ts and cpus is not None:
             trials = ", ".join(f"{t:.1f}" for t in ts)
-            rows[cpus] = f"| local[{cpus}] | {trials} | {_median(ts):.1f} |"
+            rows.append(
+                (cpus, f"| {phase} | local[{cpus}] | {trials} | {_median(ts):.1f} |")
+            )
 
     if s:
-        put(s.get("cpus_n"), s.get("n_trials"))
-        put(s.get("cpus_4n"), s.get("4n_trials"))
+        put("scaling", s.get("cpus_n"), s.get("n_trials"))
+        put("scaling", s.get("cpus_4n"), s.get("4n_trials"))
     if payload:
-        # label the headline trials with the parallelism they were RECORDED
-        # at (carried in the payload since the headline_cpus key existed) —
-        # a regeneration under a different SPARK_GRAFT_CPUS must not relabel
-        # or shadow them; CPUS is only the legacy-payload fallback
-        put(payload.get("headline_cpus") or CPUS, payload.get("headline_trials"))
-    for cpus in sorted({*SCALE_CPUS, CPUS}):
-        path = f"{SCALE_TMP_DIR}/lsh_qd_bench_scale_{cpus}.json"
-        if cpus in rows or not os.path.exists(path):
-            continue
-        with open(path) as f:
-            d = json.load(f)
-        put(cpus, d.get("trials") or [d["sec"]])
-    return [rows[c] for c in sorted(rows)]
-
-
-def _queries_best_lines(b: dict) -> list[str]:
-    """Best recorded per-query seconds (queries_best ratchet) — one line,
-    compact: `{name: sec}` plus the worst probe context across entries."""
-    qb = b.get("queries_best")
-    if not qb:
-        return []
-    secs = {name: r.get("sec") for name, r in sorted(qb.items())}
-    probes = [
-        (r.get("probe") or {}).get("effective_cores")
-        for r in qb.values()
-        if (r.get("probe") or {}).get("effective_cores") is not None
-    ]
-    ctx = (
-        f" (probe range {min(probes)}–{max(probes)} effective cores "
-        "across entries)"
-        if probes
-        else ""
-    )
-    return [
-        "",
-        "**Best recorded per-query seconds (BENCH/best_scaling.json "
-        f"`queries_best`): `{json.dumps(secs)}`**{ctx}. The per-query "
-        "line above is THIS run's weather; this row is each query's "
-        "demonstrated ceiling (plans pinned in BENCH/PLANS.md — swings "
-        "between the two are host steal, not plan changes).",
-        "",
-    ]
-
-
-def _wg_best_lines(b: dict) -> list[str]:
-    """One markdown paragraph per recorded within-grant best slot
-    (``within_grant_best`` is the 1→4 pair; ``within_grant_best_NxM``
-    are wider pairs attempted when the host grant allows)."""
-    lines: list[str] = []
-    for key in sorted(k for k in b if k.startswith("within_grant_best")):
-        w = b[key]
-        eff = w.get("scaling_efficiency_n_to_4n")
-        if w.get("round_probes"):
-            probes = str(
-                [p.get("effective_cores") for p in w["round_probes"]]
-            )
-        else:
-            probes = str((w.get("probe") or {}).get("effective_cores"))
-        lines += [
-            "**Best recorded within-grant N→4N pair "
-            f"(BENCH/best_scaling.json `{key}`): efficiency {eff}**"
-            + (" — MEETS the ≥ 0.8 target" if (eff or 0) >= 0.8 else "")
-            + f": local[{w.get('cpus_n')}] → local[{w.get('cpus_4n')}] at "
-            f"{w.get('n_pages')} pages ({w.get('n_sec')}s → "
-            f"{w.get('4n_sec')}s), probe(s) {probes} effective cores, "
-            f"recorded {w.get('recorded_at')}.",
-            "",
-        ]
-    return lines
-
-
-def _cluster_sim_lines(b: dict) -> list[str]:
-    """One markdown paragraph per recorded multi-executor best slot —
-    real local-cluster executor JVMs, the literal N→4N-executors shape."""
-    lines: list[str] = []
-    for key in sorted(k for k in b if k.startswith("cluster_sim_best")):
-        w = b[key]
-        eff = w.get("scaling_efficiency_n_to_4n")
-        probes = str([p.get("effective_cores") for p in (w.get("round_probes") or [])])
-        lines += [
-            "**Best recorded MULTI-EXECUTOR N→4N pair "
-            f"(BENCH/best_scaling.json `{key}`): efficiency {eff}**"
-            + (" — MEETS the ≥ 0.8 target" if (eff or 0) >= 0.8 else "")
-            + f": local-cluster {w.get('executors_n')} executor(s) → "
-            f"{w.get('executors_4n')} executors × "
-            f"{w.get('cores_per_executor')} cores each (separate executor "
-            f"JVMs, package shipped as a py-files zip) at "
-            f"{w.get('n_pages')} pages ({w.get('n_sec')}s → "
-            f"{w.get('4n_sec')}s), probe(s) {probes} effective cores"
-            + (
-                f", achieved task concurrency "
-                f"{round(w['n_achieved_concurrency'], 2)} of "
-                f"{w.get('executors_n', 0) * w.get('cores_per_executor', 0)} "
-                f"(N) / {w.get('4n_achieved_concurrency')} of "
-                f"{w.get('executors_4n', 0) * w.get('cores_per_executor', 0)}"
-                " (4N) task slots filled — a 4N leg short of its slots "
-                "localizes the ratio shortfall in the host grant"
-                if w.get("4n_achieved_concurrency") is not None
-                and w.get("n_achieved_concurrency") is not None
-                else ""
-            )
-            + f", recorded {w.get('recorded_at')}.",
-            "",
-        ]
-    return lines
-
-
-def _endurance_lines(b: dict) -> list[str]:
-    """Markdown paragraph for the banked endurance record (≥ 10M-page
-    single-pass completion with memory + CC telemetry)."""
-    e = b.get("endurance_best")
-    if not e:
-        return []
-    cc = e.get("cc") or {}
-    pm = e.get("peak_memory") or {}
-    heap = pm.get("peak_jvm_heap_bytes")
-    return [
-        "**Endurance record (BENCH/best_scaling.json `endurance_best`):** "
-        f"{e.get('n_pages')} pages end-to-end in {e.get('sec')}s "
-        f"({e.get('pages_per_sec')} pages/sec) at local[{e.get('cpus')}], "
-        f"probe {(e.get('probe') or {}).get('effective_cores')} effective "
-        "cores. Connected components resolved via the "
-        f"{cc.get('path')} path in {cc.get('iterations')} iteration(s) over "
-        f"{cc.get('n_edges')} verified edges"
-        + (
-            f"; peak JVM heap {round(heap / (1 << 30), 2)} GiB"
-            if heap
-            else ""
+        put(
+            "headline",
+            payload.get("headline_cpus") or CPUS,
+            payload.get("headline_trials"),
         )
-        + (
-            f", storage memory used "
-            f"{round(pm['used_storage_memory_bytes'] / (1 << 30), 2)} of "
-            f"{round(pm['max_storage_memory_bytes'] / (1 << 30), 2)} GiB"
-            if pm.get("max_storage_memory_bytes")
-            else ""
-        )
-        + f". Recorded {e.get('recorded_at')} — a full pass at 3x the "
-        "bench corpus with bounded memory and a converging CC loop is the "
-        "100x-scale smoke signal the per-query numbers cannot give.",
-        "",
-    ]
+    return [row for _, row in sorted(rows, key=lambda r: r[0])]
 
 
 def write_bench_md(payload: dict) -> None:
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    """BENCH/BASELINE.md from this run's payload — nothing else."""
     s = payload.get("scaling") or {}
-    b = payload.get("scaling_best_recorded") or {}
-    summary = payload.get("scaling_best_summary") or _scaling_summary(b)
-    def _slot_probe(k: str) -> str:
-        rec = b if k == "primary_4_to_16" else (b.get(k) or {})
-        probes = [
-            p.get("effective_cores")
-            for p in rec.get("round_probes") or []
-            if isinstance(p, dict)
-        ]
-        shape = (
-            f"{rec.get('executors_n')}→{rec.get('executors_4n')} executors × "
-            f"{rec.get('cores_per_executor')} core(s)"
-            if rec.get("executors_n") is not None
-            else f"local[{rec.get('cpus_n')}]→local[{rec.get('cpus_4n')}]"
-        )
-        return (
-            f" ({shape}, {rec.get('n_pages')} pages, probes "
-            f"{[p for p in probes if p is not None]} effective cores)"
-            if rec
-            else ""
-        )
-
-    met = [
-        f"`{k}` = {v}" + _slot_probe(k)
-        for k, v in sorted(summary.get("efficiency_by_slot", {}).items())
-        if v >= summary.get("target", 0.8)
-    ]
     lines = [
         "# BENCH — measured throughput & scaling",
         "",
-        (
-            "**Scaling target ≥ 0.8 N→4N: MET** by recorded slot(s) "
-            + ", ".join(met)
-            + " (full records with probes below and in "
-            "BENCH/best_scaling.json)."
-            if met
-            else "**Scaling target ≥ 0.8 N→4N: not yet met in any "
-            "recorded slot** (best "
-            f"{summary.get('best')}; the watcher keeps retrying)."
-        ),
+        "Written by `python bench.py`; every number below is from that one "
+        f"run ({payload.get('value')} s wall).",
         "",
-        f"- corpus: deterministic synthetic pages, n={s.get('n_pages', BENCH_DOCS)}",
+        f"- host: {os.cpu_count()} CPUs, {len(os.sched_getaffinity(0))} "
+        "usable by the run",
+        f"- corpus: deterministic synthetic pages, n={payload.get('bench_docs')}",
         f"- config: {BENCH_CFG}",
-        f"- end-to-end dedup (shingle→minhash→band→pairs→verify→cluster)",
-        "",
-        "| parallelism | wall (s) | pages/sec |",
-        "|---|---|---|",
-        f"| local[{s.get('cpus_n')}] (N) | {s.get('n_sec')} | {s.get('n_pages_per_sec')} |",
-        f"| local[{s.get('cpus_4n')}] (4N) | {s.get('4n_sec')} | {s.get('4n_pages_per_sec')} |",
-        "",
-        f"**Scaling efficiency N→4N: {s.get('scaling_efficiency_n_to_4n')}**"
-        " (target ≥ 0.8 per BASELINE.json; sandbox proxy for N vs 4N executors"
-        " per the driver instruction). Median of per-round paired ratios: "
-        f"`{s.get('round_ratios')}`.",
-        "",
-        *(
-            [
-                "**Achieved task concurrency (host-independent instrument):** "
-                f"local[{s.get('cpus_n')}] kept "
-                f"{s.get('n_achieved_concurrency')} task-slots busy, "
-                f"local[{s.get('cpus_4n')}] kept "
-                f"{s.get('4n_achieved_concurrency')} "
-                "(executor-task-seconds ÷ wall-seconds via the Spark status "
-                "API, median across rounds). A 4N leg that sustains ~4N "
-                "busy slots while the wall-clock ratio falls short "
-                "localizes the shortfall in the host's core grant, not the "
-                "engine's plan.",
-                "",
-            ]
-            if s.get("n_achieved_concurrency") is not None
-            else []
-        ),
-        *(
-            [
-                "**Best recorded run (any window, BENCH/best_scaling.json): "
-                f"efficiency {b.get('scaling_efficiency_n_to_4n')}** at "
-                f"{b.get('recorded_at')}, probes "
-                f"`{[p.get('effective_cores') for p in (b.get('round_probes') or [])]}`"
-                f" effective cores, per-round ratios `{b.get('round_ratios')}`. "
-                "The headline above is THIS run's weather; the best-recorded "
-                "row is the engine's demonstrated ceiling with its "
-                "granted-cores context.",
-                "",
-            ]
-            # headline_best alone can populate the file; key on the
-            # primary pair's own field, not dict truthiness
-            if b.get("scaling_efficiency_n_to_4n") is not None
-            else [
-                "No best-recorded quiet-window run yet this cycle "
-                "(BENCH/best_scaling.json absent — the watcher retries "
-                "--scaling-only whenever the host grants enough cores).",
-                "",
-            ]
-        ),
-        *(
-            [
-                "**Within-grant pair (all primary rounds ran under a bad "
-                f"grant):** local[{s['within_grant']['cpus_n']}] → "
-                f"local[{s['within_grant']['cpus_4n']}] at "
-                f"{s['within_grant']['n_pages']} pages measured efficiency "
-                f"**{s['within_grant']['scaling_efficiency_n_to_4n']}**"
-                + (
-                    " — MEETS the ≥ 0.8 target"
-                    if (
-                        s["within_grant"].get("scaling_efficiency_n_to_4n")
-                        or 0
-                    )
-                    >= 0.8
-                    else ""
-                )
-                + f" ({s['within_grant']['n_sec']}s → "
-                f"{s['within_grant']['4n_sec']}s). This pair fits inside "
-                "the cores the host actually granted, so it measures the "
-                "engine, not the hypervisor; the 4→16 number above is the "
-                "contended measurement, kept as primary for honesty.",
-                "",
-            ]
-            if s.get("within_grant")
-            else []
-        ),
-        *_wg_best_lines(b),
-        *_cluster_sim_lines(b),
-        *_endurance_lines(b),
-        "Historical ceiling: one genuinely quiet round-2 window (commit "
-        "fd5cdec, before the probe-attached ratchet existed) measured "
-        "**0.961** on the standard 3M-page 4→16 pair — 163.4 s → 42.5 s, "
-        "same job and discipline (BENCH/WEATHER.md, table row 1). Every "
-        "probe-attached run since has seen a ≤ 6.3-core grant, and the "
-        "measured ratio is monotone in the granted cores.",
-        "",
-        "Host weather at each round's start (effective cores granted of "
-        f"{PROBE_THREADS} requested, measured by a fixed numpy probe — "
-        "hypervisor steal hits high-parallelism windows hardest, biasing "
-        "the ratio strictly downward): "
-        f"`{[p.get('effective_cores') for p in (s.get('round_probes') or [])]}`.",
+        "- end-to-end dedup (shingle→minhash→band→pairs→verify→cluster)",
         "",
         f"Headline per-query seconds at {payload.get('sf')}: "
         f"`{json.dumps(payload.get('queries', {}))}`",
-        *_queries_best_lines(b),
-        # label with the parallelism the payload's throughput was RECORDED
-        # at (same rule as the trials table) — a regeneration under a
-        # different SPARK_GRAFT_CPUS must not relabel it
-        f"Headline dedup throughput at "
-        f"local[{payload.get('headline_cpus') or CPUS}]: "
-        f"{payload.get('pages_per_sec')} pages/sec "
-        "(fresh JVM, warm-up pass, median of "
-        f"{SCALE_TRIALS} trials — same discipline as the scaling rows).",
         "",
-        *(
-            [
-                "**Best recorded headline throughput "
-                "(BENCH/best_scaling.json `headline_best`): "
-                f"{payload['headline_best_recorded'].get('pages_per_sec')} "
-                f"pages/sec** ({payload['headline_best_recorded'].get('sec')}s "
-                f"for {payload['headline_best_recorded'].get('n_pages')} pages "
-                f"at local[{payload['headline_best_recorded'].get('cpus')}])"
-                + (
-                    ", probe "
-                    f"{payload['headline_best_recorded']['probe'].get('effective_cores')}"
-                    " effective cores"
-                    if payload["headline_best_recorded"].get("probe")
-                    else ""
-                )
-                + ", recorded "
-                f"{payload['headline_best_recorded'].get('recorded_at')}"
-                + (
-                    f" ({payload['headline_best_recorded']['provenance']})"
-                    if payload["headline_best_recorded"].get("provenance")
-                    else ""
-                )
-                + ". The line above is THIS run's weather; this row is the "
-                "engine's demonstrated ceiling with its probe context.",
-                "",
-            ]
-            if payload.get("headline_best_recorded")
-            else []
-        ),
+        f"Headline dedup throughput at local[{payload.get('headline_cpus')}]: "
+        f"{payload.get('pages_per_sec')} pages/sec (fresh JVM, warm-up pass, "
+        f"median of {len(payload.get('headline_trials') or [])} trials).",
+        "",
+    ]
+    if s:
+        lines += [
+            "| parallelism | wall (s) | pages/sec | achieved concurrency |",
+            "|---|---|---|---|",
+            f"| local[{s.get('cpus_n')}] (N) | {s.get('n_sec')} | "
+            f"{s.get('n_pages_per_sec')} | {s.get('n_achieved_concurrency')} |",
+            f"| local[{s.get('cpus_4n')}] (4N) | {s.get('4n_sec')} | "
+            f"{s.get('4n_pages_per_sec')} | {s.get('4n_achieved_concurrency')} |",
+            "",
+            f"**Scaling efficiency N→4N: {s.get('scaling_efficiency_n_to_4n')}**"
+            f" — target ≥ {s.get('target')} "
+            + ("met" if s.get("target_met") else "not met")
+            + f" in this run. Median of per-round paired ratios "
+            f"`{s.get('round_ratios')}` at {s.get('n_pages')} pages. Achieved "
+            "concurrency is executor-task-seconds ÷ wall-seconds from the "
+            "Spark status API (median across rounds): a 4N leg that keeps "
+            "~4N slots busy while the wall-clock ratio falls short points "
+            "at the host's core grant, not the engine's plan.",
+            "",
+        ]
+    else:
+        lines += ["No scaling measurement in this run.", ""]
+    lines += [
         "## Measurement discipline",
         "",
         "Every throughput number comes from the same protocol: fresh JVM per",
         "parallelism level (child process), a warm-up signature pass outside",
-        f"the timed window, then median of {SCALE_TRIALS} end-to-end trials.",
-        "Raw trials (seconds):",
+        "the timed window, then the median of the end-to-end trials. Scaling",
+        "trials are INTERLEAVED in time (N,4N,N,4N,…) so host-load drift hits",
+        "both levels equally. Raw trials (seconds):",
         "",
-        "| parallelism | trials | median |",
-        "|---|---|---|",
+        "| phase | parallelism | trials | median |",
+        "|---|---|---|---|",
         *_trial_rows(s, payload),
         "",
-        "The sandbox shares its host (steal-time spikes show up as trial",
-        "outliers); median absorbs them where a single cold run or min-of-N",
-        "does not, and the scaling trials are INTERLEAVED in time",
-        "(N,4N,N,4N,…) so host-load drift hits both parallelism levels",
-        "equally instead of fabricating or destroying the ratio. Scaling",
-        "evidence uses the N→4N pair above rather than 8→32 because a",
-        f"fully saturated local[{CPUS}] measures the host's neighbors, not",
-        "the engine. Physical-plan audit: BENCH/PLANS.md",
-        "(`python plan_audit.py`).",
+        "Per-layer numbers: `python3 perfbench/run.py --trace 1`. Physical-plan",
+        "audit: BENCH/PLANS.md (`python plan_audit.py`).",
     ]
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
 
 
 # --- hard-deadline watchdog --------------------------------------------------
-# Round-2 post-mortem: the driver's bench budget is finite and a starved
-# host can stall ANY Spark stage indefinitely — phase deadlines only help
-# between phases. The watchdog guarantees the contract the driver needs
-# (ONE parseable JSON line, rc=0) unconditionally: at HARD_DEADLINE it
-# prints the latest payload snapshot (whatever phases completed, flagged
+# A starved host can stall ANY Spark stage indefinitely — phase deadlines
+# only help between phases. At HARD_DEADLINE the watchdog reaps the worker
+# processes, prints the snapshot of what this run measured so far (flagged
 # "timed_out": true) and exits 0. Normal completion disarms it.
-#
-# Default 1740 s (29 min): the watchdog only helps if it fires BEFORE the
-# driver's own kill. The driver's budget is unrecorded; the only hard data
-# points are round 1 passing at 799 s and round 2 being killed (rc=124)
-# after its gate sleeps, so the watchdog must sit inside the smallest
-# plausible budget above 800 s (~30 min). A squeezed scaling phase is
-# fine — the payload always carries the ratcheted best_scaling records —
-# but an unparsed artifact loses the whole round. Manual runs chasing a
-# long quiet window should raise this explicitly.
 HARD_DEADLINE_SEC = int(os.environ.get("SPARK_GRAFT_BENCH_HARD_DEADLINE", "1740"))
 _done = threading.Event()
 _latest_payload: dict = {}
+
+
+def _emit(payload: dict) -> None:
+    """Single exit path for the printed JSON line (main + watchdog)."""
+    sys.stdout.write(json.dumps(payload) + "\n")
+    sys.stdout.flush()
 
 
 def _arm_watchdog(t_start: float) -> None:
     def fire() -> None:
         if _done.wait(timeout=max(0.0, t_start + HARD_DEADLINE_SEC - time.time())):
             return  # normal completion
-        # reap in-flight workers FIRST: os._exit abandons children, and an
-        # orphaned worker JVM would keep thrashing the host through the
-        # driver's next phases (correctness run, entry smoke)
+        # reap in-flight workers FIRST: os._exit abandons children
         for p in list(_live_children):
             _kill_child_tree(p)
         _latest_payload.setdefault("metric", "total_bench_sec")
         _latest_payload.setdefault("unit", "sec")
         _latest_payload["value"] = round(time.time() - t_start, 2)
         _latest_payload["timed_out"] = True
-        _emit(_latest_payload, t_start)
+        _emit(_latest_payload)
         os._exit(0)
 
     threading.Thread(target=fire, daemon=True, name="bench-watchdog").start()
 
 
-def _write_payload_cache(payload: dict) -> None:
-    """Atomic write with a one-deep ``.bak``: BENCH/payload.json is graded
-    evidence, so a run that dies mid-write must never leave it torn, and
-    any overwrite keeps the previous version recoverable."""
-    cache = os.path.join(REPO, "BENCH", "payload.json")
-    os.makedirs(os.path.dirname(cache), exist_ok=True)
-    # sweep tmp strandings from prior killed runs (driver windows SIGKILL
-    # at arbitrary points) — only files old enough that no live writer can
-    # own them, so the sweep never races a concurrent in-flight write;
-    # thread ident in the name because _emit can run concurrently from the
-    # main thread and the watchdog thread
-    import glob
-
-    for stale in glob.glob(cache + ".tmp.*"):
-        try:
-            if time.time() - os.path.getmtime(stale) > 3600:
-                os.remove(stale)
-        except OSError:
-            pass
-    tmp = cache + f".tmp.{os.getpid()}.{threading.get_ident()}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f, indent=2)
-        f.flush()
-        os.fsync(f.fileno())
-    if os.path.exists(cache):
-        try:
-            import shutil
-
-            shutil.copy2(cache, cache + ".bak")
-        except OSError:
-            pass
-    os.replace(tmp, cache)
-
-
-#: set while _emit is writing its stdout line (main thread or watchdog
-#: thread). The SIGTERM handler checks it and SKIPS its own snapshot write
-#: when an emit is in flight — two interleaved writers would tear the very
-#: tail line the driver's parse takes (round-5 ADVICE fix).
-_emitting = threading.Event()
-
-
-def _emit(payload: dict, t_start: float) -> None:
-    """Single exit path for the printed JSON contract (main + watchdog)."""
-    try:
-        _write_payload_cache(payload)
-    except OSError as e:
-        sys.stderr.write(f"payload cache write failed: {e}\n")
-    _emitting.set()
-    try:
-        sys.stdout.write(json.dumps(payload) + "\n")
-        sys.stdout.flush()
-    finally:
-        _emitting.clear()
-
-
-def _provisional_payload() -> dict:
-    """Assemble the strongest banked evidence purely from disk — no Spark,
-    no JVM. A graded invocation prints this as its FIRST stdout line, so
-    a driver window that kills the process seconds after launch (r2:
-    rc=124; r3: rc=-1 with an empty tail) still leaves a tail-parseable
-    JSON line carrying the ratcheted scaling slots (including the
-    gate-meeting cluster-sim/within-grant pairs). The real line replaces
-    it at the end of a full run — a tail parse takes whichever line
-    printed last.
-
-    Evidence-integrity contract (round-5 ADVICE fix): every key a
-    flag-unaware tail parser could mistake for THIS run's measurement
-    (``value``, ``queries``, ``pages_per_sec``, ``headline_trials``,
-    ``scaling``, ``bench_docs``) is null/empty here. The previous run's
-    measured numbers ride along only under the distinct
-    ``cached_previous_run`` key, and the ratchets keep their explicitly
-    labeled ``*_best_recorded`` names — stale data can no longer be
-    parsed as a fresh measurement even by a parser that ignores the
-    ``provisional`` flag."""
-    try:
-        with open(os.path.join(REPO, "BENCH", "payload.json")) as f:
-            prev = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        prev = {}
-    try:
-        best = update_best_scaling(None)
-    except Exception as e:  # noqa: BLE001 — never let this path die
-        sys.stderr.write(f"provisional best-scaling read failed: {e}\n")
-        best = None
-    p = {
-        "metric": "total_bench_sec",
-        "value": None,
-        "unit": "sec",
-        "provisional": True,
-        "queries": {},
-        "sf": prev.get("sf", SF_DIR),
-        "bench_docs": None,
-        "pages_per_sec": None,
-        "headline_trials": [],
-        "headline_cpus": None,
-        "scaling": None,
-        "cached_previous_run": {
-            k: prev.get(k)
-            for k in (
-                "value",
-                "queries",
-                "bench_docs",
-                "pages_per_sec",
-                "headline_trials",
-                "headline_cpus",
-                "scaling",
-            )
-        }
-        if prev
-        else None,
-        "scaling_best_recorded": best,
-        "headline_best_recorded": (best or {}).get("headline_best"),
-        "scaling_best_summary": _scaling_summary(best),
-    }
-    return p
-
-
-def _write_provisional_latest() -> None:
-    """Round-5 VERDICT #1: the provisional payload existed only on stdout;
-    a driver window that never wires up stdout capture (the apparent r3/r4
-    mode — rc=-1, byte-empty tail, 0.26 s budget) left no new evidence
-    anywhere. This writes the same payload atomically to
-    ``BENCH/provisional_latest.json`` at IMPORT time — before argv
-    dispatch, before any Spark — so even a capture-less zero-budget spawn
-    timestamps disk evidence carrying the gate-meeting banked slots."""
-    try:
-        payload = dict(
-            _provisional_payload(),
-            written_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            written_at_unix=round(time.time(), 3),
-        )
-        out = os.path.join(REPO, "BENCH", "provisional_latest.json")
-        os.makedirs(os.path.dirname(out), exist_ok=True)
-        tmp = out + f".tmp.{os.getpid()}.{threading.get_ident()}"
-        with open(tmp, "w") as f:
-            json.dump(payload, f, indent=2)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, out)
-    except Exception as e:  # noqa: BLE001 — import must never fail on this
-        try:
-            sys.stderr.write(f"provisional disk artifact write failed: {e}\n")
-        except Exception:  # noqa: BLE001
-            pass
-
-
-def _print_provisional() -> None:
-    try:
-        sys.stdout.write(json.dumps(_provisional_payload()) + "\n")
-        sys.stdout.flush()
-    except Exception as e:  # noqa: BLE001 — provisional print is best-effort
-        sys.stderr.write(f"provisional payload print failed: {e}\n")
+def _terminate_with_children(signum, frame) -> None:
+    """SIGTERM handler: take this run's in-flight worker groups (and their
+    JVMs) down with it, then exit 143."""
+    for p in list(_live_children):
+        _kill_child_tree(p)
+    os._exit(143)
 
 
 def _usage() -> str:
     return (
-        "usage: python bench.py [MODE]\n"
-        "  (bare) | --full          graded full bench: per-query times + 3M-page\n"
-        "                           dedup throughput + N->4N scaling; prints a\n"
-        "                           provisional JSON line first, the real one last\n"
-        "  --skip-scaling           full bench minus the scaling phase\n"
-        "  --scaling-only           redo only the scaling rounds (headline cached)\n"
-        "  --headline-only          dedup-throughput phase only\n"
-        "  --queries-only           per-query phase only\n"
-        "  --wg-only [n] [N:4N]     within-grant scaling pair\n"
-        "  --endurance [n]          one >=10M-page end-to-end pass "
-        "(memory/CC record)\n"
-        "  --cluster-sim [n] [N:4N] [cores]   multi-executor local-cluster pair\n"
-        "  -h | --help              this text + the provisional JSON line; exit 2\n"
-        "Unknown arguments print this usage and exit 2 — they never start a run.\n"
+        "usage: python bench.py [--full | --skip-scaling]\n"
+        "  (bare) | --full   per-query times + dedup throughput + N->4N scaling\n"
+        "  --skip-scaling    the same without the scaling phase\n"
+        "Any other argument prints this usage and exits 2 without a run.\n"
     )
-
-
-def _scaling_summary(best: dict | None) -> dict:
-    """Flat efficiency-per-slot digest of best_scaling.json for the
-    driver's graded JSON line: the full per-slot records (probes, trials,
-    timestamps) stay in ``scaling_best_recorded``; this summary puts the
-    one number each slot earned — plus whether ANY honestly-gated N→4N
-    pair meets the ≥ 0.8 target — at the top of the artifact, so the
-    target verdict doesn't depend on digging through nested blocks."""
-    slots: dict[str, float] = {}
-    for k, v in (best or {}).items():
-        if (
-            isinstance(v, dict)
-            and v.get("scaling_efficiency_n_to_4n") is not None
-            and k != "headline_best"
-        ):
-            slots[k] = v["scaling_efficiency_n_to_4n"]
-    if (best or {}).get("scaling_efficiency_n_to_4n") is not None:
-        slots["primary_4_to_16"] = best["scaling_efficiency_n_to_4n"]
-    return {
-        "efficiency_by_slot": slots,
-        "target": 0.8,
-        "target_met": any(e >= 0.8 for e in slots.values()),
-        "best": max(slots.values()) if slots else None,
-    }
-
-
-def _preempt_foreign_benches() -> None:
-    """Driver-mode runs own the host: a quiet-window watcher attempt
-    (scripts/quiet_scaling_watch.py) can be mid-flight in a ~25-min
-    --scaling-only run when the driver's round bench starts — it would
-    steal the cores this run is graded on AND race it on the shared
-    /tmp/lsh_qd_bench_scale_*.json worker files. The watcher stands down
-    at poll time but cannot abort an in-flight attempt, so the graded run
-    terminates every other bench.py process tree (they are only ever the
-    watcher's children; their partial results are already ratcheted into
-    best_scaling.json the moment each round completes)."""
-    me = os.getpid()
-    try:
-        r = subprocess.run(
-            ["pgrep", "-f", r"python[0-9.]* .*bench\.py"],
-            capture_output=True,
-            text=True,
-        )
-        pids = [int(p) for p in r.stdout.split() if p.strip().isdigit()]
-        foreign = [p for p in pids if p not in (me, os.getppid())]
-        for pid in foreign:
-            try:
-                # worker children run as process-group leaders (see
-                # _run_child); killing the group reaps their JVMs too.
-                # Non-leaders (the watcher's top-level bench.py) raise
-                # ProcessLookupError from killpg only if gone — getpgid
-                # guards the leader check instead.
-                if os.getpgid(pid) == pid and pid != os.getpgid(me):
-                    os.killpg(pid, 15)
-                else:
-                    os.kill(pid, 15)
-            except (ProcessLookupError, PermissionError):
-                pass
-        if foreign:
-            sys.stderr.write(
-                f"preempted foreign bench processes: {foreign}\n"
-            )
-            time.sleep(5)  # let their JVMs shut down before we spin ours
-    except Exception as e:  # noqa: BLE001 — preemption is best-effort
-        sys.stderr.write(f"foreign-bench preemption failed: {e}\n")
-
-
-def _terminate_with_children(signum, frame) -> None:
-    """SIGTERM handler: a preempted bench (the graded run TERMs foreign
-    bench.py processes) must take its in-flight worker groups down with
-    it — dying bare would orphan exactly the JVMs preemption wanted gone.
-
-    Before exiting, emit the latest payload snapshot: `timeout`-driven
-    driver budgets deliver exactly this signal (the r2 rc=124 window), and
-    the phases measured so far plus the ratcheted bests beat leaving only
-    the launch-time provisional line in the tail. Harmless for preempted
-    watcher children — their stdout goes to DEVNULL.
-
-    Tear guard (round-5 ADVICE fix): if the signal lands while _emit (main
-    or watchdog thread) is mid-write, wait briefly for it to finish — when
-    the writer is the WATCHDOG thread it keeps running during this handler
-    and its completed+flushed line becomes the tail. If the flag does not
-    clear in time (the writer is the MAIN thread, frozen under this very
-    handler — it can never finish), emit the snapshot anyway as ONE
-    os.write prefixed with a newline: os._exit would otherwise discard the
-    interrupted write still sitting in Python's stdout buffer and leave NO
-    fresh tail line at all, and the leading newline guarantees the
-    snapshot starts on its own line even if a partial flush of the
-    interrupted line already reached the pipe."""
-    for p in list(_live_children):
-        _kill_child_tree(p)
-    try:
-        interrupted_emit = _emitting.is_set()
-        if interrupted_emit:
-            for _ in range(20):  # ≤ 2 s for a watchdog-thread emit to land
-                time.sleep(0.1)
-                if not _emitting.is_set():
-                    interrupted_emit = False
-                    break
-        if _latest_payload:
-            _latest_payload.setdefault("metric", "total_bench_sec")
-            _latest_payload.setdefault("unit", "sec")
-            _latest_payload.setdefault("value", None)
-            _latest_payload["terminated"] = True
-            prefix = "\n" if interrupted_emit else ""
-            line = prefix + json.dumps(_latest_payload) + "\n"
-            os.write(1, line.encode())
-    except Exception:  # noqa: BLE001 — the exit must never hang on this
-        pass
-    os._exit(143)
 
 
 def main() -> None:
@@ -2062,270 +652,62 @@ def main() -> None:
         n_docs = int(sys.argv[5]) if len(sys.argv) >= 6 else None
         worker(int(sys.argv[2]), sys.argv[3], n_trials, n_docs)
         return
-    if len(sys.argv) >= 5 and sys.argv[1] == "--cluster-worker":
-        cluster_worker(
-            int(sys.argv[2]),
-            int(sys.argv[3]),
-            sys.argv[4],
-            int(sys.argv[5]) if len(sys.argv) >= 6 else None,
-            int(sys.argv[6]) if len(sys.argv) >= 7 else None,
-            int(sys.argv[7]) if len(sys.argv) >= 8 else 6144,
-        )
-        return
-    if "--cluster-sim" in sys.argv:
-        i = sys.argv.index("--cluster-sim")
-        rest = sys.argv[i + 1 : i + 4]
-        execs = (1, 4)
-        for a in rest:
-            if ":" in a and not a.startswith("-"):
-                lo, hi = a.split(":", 1)
-                execs = (int(lo), int(hi))
-        # positionals: [n_docs] [N:4N] [cores] — n_docs is the first bare
-        # integer ≥ 1000 (a bare small integer alone means cores)
-        bare = [int(a) for a in rest if a.isdigit()]
-        n_docs = next((b for b in bare if b >= 1000), 1_000_000)
-        small = [b for b in bare if b < 1000]
-        cores = small[-1] if small else 2
-        if not 1 <= cores <= 16:
-            # a mistyped corpus size (e.g. 800) must not become 800 task
-            # slots per executor JVM
-            raise SystemExit(
-                f"--cluster-sim cores={cores} out of range 1..16 "
-                "(positionals: [n_docs>=1000] [N:4N] [cores])"
-            )
-        cluster_sim_only(n_docs, execs=execs, cores=cores)
-        return
-    if "--wg-only" in sys.argv:
-        i = sys.argv.index("--wg-only")
-        n_docs = (
-            int(sys.argv[i + 1])
-            if len(sys.argv) > i + 1 and sys.argv[i + 1].isdigit()
-            else BENCH_DOCS
-        )
-        # the pair is a positional right after --wg-only [n_docs]; do not
-        # scan the whole argv (a later path argument may contain ':')
-        cpus = (1, 4)
-        for a in sys.argv[i + 1 : i + 3]:
-            if ":" in a and not a.startswith("-"):
-                lo, hi = a.split(":", 1)
-                cpus = (int(lo), int(hi))
-                break
-        within_grant_only(n_docs, cpus=cpus)
-        return
-    if "--endurance" in sys.argv:
-        i = sys.argv.index("--endurance")
-        n_docs = (
-            int(sys.argv[i + 1])
-            if len(sys.argv) > i + 1 and sys.argv[i + 1].isdigit()
-            else 10_000_000
-        )
-        endurance_only(n_docs)
-        return
-    if "--headline-only" in sys.argv:
-        headline_only()
-        return
-    if "--queries-only" in sys.argv:
-        queries_only()
-        return
-    known = {"--skip-scaling", "--scaling-only", "--full"}
-    unknown = [a for a in sys.argv[1:] if a not in known]
-    if unknown:
-        # -h/--help/any typo: usage + the provisional JSON line, exit 2.
-        # NEVER start a run (r3 lesson: `--help` silently launched a
-        # ~13-min full bench that contends for the host and rewrites
-        # BENCH/payload.json). The graded full run requires a bare
-        # invocation or an explicit --full.
+    if [a for a in sys.argv[1:] if a not in ("--full", "--skip-scaling")]:
         sys.stderr.write(_usage())
-        _print_provisional()
         raise SystemExit(2)
-    # A graded invocation's FIRST stdout line is the provisional payload,
-    # printed before any Spark/JVM work (before even the foreign-bench
-    # preemption sleep): a zero-budget driver window still yields a
-    # parseable artifact carrying the banked scaling slots.
-    _print_provisional()
-    skip_scaling = "--skip-scaling" in sys.argv
-    # --scaling-only: redo ONLY the scaling rounds, reusing the last run's
-    # headline numbers from BENCH/BASELINE's payload cache. Purpose: cheap
-    # repeated attempts to land the scaling measurement in a quiet host
-    # window without paying the ~12-min headline phase each try.
-    scaling_only = "--scaling-only" in sys.argv
-    payload_cache = os.path.join(REPO, "BENCH", "payload.json")
-
-    if len(sys.argv) == 1 or "--full" in sys.argv:
-        # a bare `python bench.py` (or explicit --full) is the driver's
-        # graded invocation
-        _preempt_foreign_benches()
-
-    # stale worker outputs from a previous run must not leak into the
-    # BASELINE.md trials table (worse with --skip-scaling, which would
-    # otherwise report old scaling rows as freshly measured)
-    keep = {CPUS} if scaling_only else set()
-    for cpus in {*SCALE_CPUS, CPUS} - keep:
-        path = f"{SCALE_TMP_DIR}/lsh_qd_bench_scale_{cpus}.json"
-        if os.path.exists(path):
-            os.remove(path)
 
     t_start = time.time()
     _arm_watchdog(t_start)
     _latest_payload.update(
+        {"metric": "total_bench_sec", "unit": "sec", "queries": {}, "sf": SF_DIR}
+    )
+    spark = _session(CPUS)
+    times = headline_queries(spark)
+    _ensure_corpus(spark, BENCH_DOCS)
+    spark.stop()
+
+    # headline dedup throughput at local[CPUS]: same fresh-JVM + warm-up +
+    # median-of-N discipline as the scaling workers. Degrade rather than
+    # die: a starved host can push 3 trials past the worker timeout — fall
+    # back to a single trial, then to reporting the phase as absent.
+    head = None
+    try:
+        head = _run_worker(CPUS)
+    except (RuntimeError, subprocess.TimeoutExpired) as e:
+        sys.stderr.write(f"headline worker failed ({e}); 1-trial retry\n")
+        try:
+            head = _run_worker(CPUS, n_trials=1)
+        except (RuntimeError, subprocess.TimeoutExpired) as e2:
+            sys.stderr.write(f"headline worker retry failed: {e2}\n")
+    times["dedup_bench_corpus"] = round(head["sec"], 3) if head else None
+    _latest_payload.update(
         {
-            "metric": "total_bench_sec",
-            "unit": "sec",
-            "queries": {},
-            "sf": SF_DIR,
-            # seed the watchdog snapshot with the ratcheted bests from
-            # disk: a watchdog fire DURING the headline phase (a 2-of-16
-            # core day can stretch any stage) must still ship the
-            # strongest recorded evidence, not an empty artifact
-            "scaling_best_recorded": update_best_scaling(None),
-            "headline_best_recorded": update_best_headline(None),
-        }
-    )
-    _latest_payload["scaling_best_summary"] = _scaling_summary(
-        _latest_payload["scaling_best_recorded"]
-    )
-    headline_trials: list[float] = []
-    headline_cpus = CPUS
-    if scaling_only:
-        # defensive .get()s: a watchdog that fired before the pre-scaling
-        # payload write leaves a reduced-schema payload on disk (no
-        # bench_docs/pages_per_sec/headline_trials); hard indexing would
-        # then fail EVERY later --scaling-only attempt until a full bench
-        # completes — exactly the runs the watcher exists to make
-        try:
-            with open(payload_cache) as f:
-                prev = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            prev = {}
-        times = prev.get("queries") or {}
-        n_pages = prev.get("bench_docs") or BENCH_DOCS
-        pages_per_sec = prev.get("pages_per_sec")
-        headline_trials = prev.get("headline_trials") or []
-        # keep the trials labeled with the parallelism they were measured
-        # at, not this process's CPUS (legacy payloads lack the key)
-        headline_cpus = prev.get("headline_cpus") or CPUS
-        spark = _session(CPUS)
-        _ensure_corpus(spark, BENCH_DOCS)
-        spark.stop()
-    else:
-        # probe BEFORE the queries (same reason as the headline probe
-        # below): the per-query ratchet stores this as weather context
-        q_probe = weather_probe()
-        spark = _session(CPUS)
-        times = headline_queries(spark)
-        _latest_payload["queries"] = times
-        update_best_queries(times, q_probe)
-        _ensure_corpus(spark, BENCH_DOCS)
-        spark.stop()
-
-        # headline dedup throughput at local[CPUS]: same fresh-JVM +
-        # warm-up + median-of-N discipline as the scaling workers.
-        # Degrade rather than die: a starved host can push 3 trials of
-        # the 3M-page job past the worker timeout — fall back to a single
-        # trial, then to reporting the phase as absent (nulls are honest;
-        # rc!=0 loses the whole artifact).
-        head = None
-        # probe BEFORE the trials: the ratchet stores this as the record's
-        # weather context, and a post-run probe can describe a window that
-        # started after the measurement finished
-        head_probe = weather_probe()
-        try:
-            head = _run_worker(CPUS)
-        except (RuntimeError, subprocess.TimeoutExpired) as e:
-            sys.stderr.write(f"headline worker failed ({e}); 1-trial retry\n")
-            try:
-                head = _run_worker(CPUS, n_trials=1)
-            except (RuntimeError, subprocess.TimeoutExpired) as e2:
-                sys.stderr.write(f"headline worker retry failed: {e2}\n")
-        if head is not None:
-            n_pages = head["n_pages"]
-            times["dedup_bench_corpus"] = round(head["sec"], 3)
-            pages_per_sec = round(n_pages / head["sec"], 1)
-            headline_trials = [round(t, 2) for t in head.get("trials", [])]
-            update_best_headline(
-                {
-                    "pages_per_sec": pages_per_sec,
-                    "sec": round(head["sec"], 2),
-                    "n_pages": n_pages,
-                    "cpus": CPUS,
-                    "probe": head_probe,
-                }
-            )
-        else:
-            n_pages = BENCH_DOCS
-            times["dedup_bench_corpus"] = None
-            pages_per_sec = None
-
-    def make_payload(scaling: dict | None) -> dict:
-        p = {
-            "metric": "total_bench_sec",
-            "value": round(time.time() - t_start, 2),
-            "unit": "sec",
-            "queries": times,
-            "sf": SF_DIR,
-            "bench_docs": n_pages,
-            "pages_per_sec": pages_per_sec,
-            # raw headline trials travel IN the payload for the same
-            # reason the scaling trials do: BASELINE.md's trials table
-            # must describe THIS payload's numbers, not whatever /tmp
-            # worker file a later standalone attempt overwrote
-            "headline_trials": headline_trials,
-            "headline_cpus": headline_cpus,
-            "scaling": scaling,
-            "scaling_best_recorded": update_best_scaling(scaling),
-            "headline_best_recorded": update_best_headline(None),
-        }
-        p["scaling_best_summary"] = _scaling_summary(
-            p["scaling_best_recorded"]
-        )
-        _latest_payload.clear()
-        _latest_payload.update(p)
-        return p
-
-    # Write the headline payload BEFORE the scaling phase (round-2 lesson:
-    # the driver bench timed out and left NO parseable artifact). If the
-    # scaling phase overruns or dies, BENCH/payload.json still carries the
-    # headline numbers + the best previously-recorded scaling block.
-    _write_payload_cache(make_payload(None))
-
-    scaling = None
-    if not skip_scaling:
-        # Internal deadline so the process always exits with a printed
-        # JSON line well inside the driver's bench budget, even when the
-        # host is granting 2 of 16 cores and every trial runs long.
-        # phase deadline sits 10 min inside HARD_DEADLINE so a last round
-        # that overruns its estimate still finishes before the watchdog
-        # would discard its ratios
-        # Clamp the phase deadline 10 min inside the watchdog's hard
-        # deadline even when the env var is set explicitly: a caller
-        # passing SPARK_GRAFT_BENCH_DEADLINE == HARD_DEADLINE would erase
-        # the margin, and an in-flight round at the hard deadline gets
-        # os._exit'd — discarding every completed round of that window.
-        deadline = t_start + min(
-            int(
-                os.environ.get(
-                    "SPARK_GRAFT_BENCH_DEADLINE",
-                    str(max(600, HARD_DEADLINE_SEC - 600)),
-                )
+            "bench_docs": head["n_pages"] if head else BENCH_DOCS,
+            "pages_per_sec": (
+                round(head["n_pages"] / head["sec"], 1) if head else None
             ),
-            max(600, HARD_DEADLINE_SEC - 600),
-        )
+            "headline_trials": (
+                [round(t, 2) for t in head.get("trials", [])] if head else []
+            ),
+            "headline_cpus": CPUS,
+            "scaling": None,
+        }
+    )
+
+    if "--skip-scaling" not in sys.argv:
+        # the phase deadline sits 10 min inside the watchdog's so a last
+        # round that overruns its estimate still finishes before the
+        # watchdog would cut it
+        deadline = t_start + max(600, HARD_DEADLINE_SEC - 600)
         try:
-            scaling = run_scaling(deadline=deadline)
+            _latest_payload["scaling"] = run_scaling(deadline=deadline)
         except Exception as e:  # noqa: BLE001 — partial results beat rc!=0
             sys.stderr.write(f"scaling phase failed: {e}\n")
 
-    payload = make_payload(scaling)
+    _latest_payload["value"] = round(time.time() - t_start, 2)
     _done.set()  # disarm the watchdog before the normal single emit
-    write_bench_md(payload)
-    _emit(payload, t_start)
-
-
-# Import-time disk evidence: runs for EVERY invocation mode (graded, help,
-# worker children) before argv dispatch — see _write_provisional_latest.
-# Workers re-writing it is harmless (same disk-sourced content, fresher
-# timestamp, atomic replace).
-_write_provisional_latest()
+    write_bench_md(_latest_payload)
+    _emit(_latest_payload)
 
 
 if __name__ == "__main__":

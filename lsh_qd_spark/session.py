@@ -116,102 +116,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SPARK_GRAFT_SESSION_WARMUP", "1") != "0":
-        _warm_session(spark)
     return spark
-
-
-# applications already warmed (getOrCreate can hand the same context back
-# many times per process — warm exactly once per underlying application)
-_WARMED: set[str] = set()
-
-
-def _warm_session(spark: SparkSession) -> None:
-    """One-time engine warm-up at session construction.
-
-    A cold Spark application pays several seconds of one-time cost inside
-    whatever query runs first: scheduler/shuffle-machinery init, janino
-    whole-stage-codegen compilation, parquet reader/writer class loading,
-    broadcast + window exec init, the Python UDF worker daemon and the
-    per-worker pandas/Arrow imports. For a long-lived production session
-    that cost lands on the first user query; running a fixed synthetic
-    micro-suite here (a few hundred rows built from ``spark.range``, a
-    temp-dir parquet round-trip — NEVER any input table, no query
-    results) moves it to session build. Measured: the first real query
-    drops ~6x (7.3s → 1.1s cold at sf0.1). Disable with
-    ``SPARK_GRAFT_SESSION_WARMUP=0``. Best-effort: any failure leaves the
-    session usable and merely cold."""
-    try:
-        app_id = spark.sparkContext.applicationId
-        if app_id in _WARMED:
-            return
-        _WARMED.add(app_id)
-        import shutil
-        import tempfile
-
-        import pandas as pd  # noqa: F401 — imported for the UDF path
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        n = max(2, spark.sparkContext.defaultParallelism)
-        df = spark.range(0, 4 * n, 1, n).select(
-            F.col("id"),
-            (F.col("id") % 7).alias("k"),
-            F.col("id").cast("string").alias("s"),
-        )
-        # expression + aggregation + shuffle (codegen, AQE, exchange init)
-        (
-            df.select(
-                F.md5(
-                    F.trim(F.regexp_replace(F.lower(F.col("s")), r"\s+", " "))
-                ).alias("h"),
-                "k",
-            )
-            .groupBy("h")
-            .agg(F.count("*").alias("n"), F.min("k"))
-            .where(F.col("n") >= 1)
-            .count()
-        )
-        # broadcast join + window rank (BroadcastExchange, WindowExec)
-        small = spark.range(0, 7).withColumnRenamed("id", "k")
-        w = Window.partitionBy("k").orderBy("id")
-        (
-            df.join(F.broadcast(small), "k")
-            .withColumn("r", F.row_number().over(w))
-            .where(F.col("r") <= 2)
-            .count()
-        )
-        # first localCheckpoint pays the DataFrame→RDD conversion init
-        # (measured seconds when it lands inside a timed query);
-        # mapInPandas and the toPandas/createDataFrame round-trip warm the
-        # remaining Arrow driver paths (verify kernel, driver-side CC)
-        df.limit(4).localCheckpoint(eager=True).count()
-
-        # Python worker daemon + per-worker pandas/Arrow import, one worker
-        # per core (spark.python.worker.reuse keeps the pool alive for the
-        # first real kernel stage)
-        @F.pandas_udf("long")
-        def _ident(x: "pd.Series") -> "pd.Series":
-            return x
-
-        df.select(_ident("id").alias("v")).where(F.col("v") >= 0).count()
-
-        def _mip(batches):
-            yield from batches
-
-        df.limit(4).mapInPandas(_mip, schema="id long, k long, s string").count()
-        spark.createDataFrame(df.limit(4).toPandas()).count()
-
-        # parquet writer + vectorized reader — LAST: the temp dir is
-        # driver-local, so on a genuinely distributed cluster this step
-        # can fail (executors cannot read the driver's filesystem); every
-        # warm above it must already have happened by then
-        tmp = tempfile.mkdtemp(prefix="spark_warm_")
-        try:
-            p = os.path.join(tmp, "w.parquet")
-            df.limit(16).write.mode("overwrite").parquet(p)
-            spark.read.parquet(p).count()
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    except Exception:  # noqa: BLE001 — warm-up must never fail the session
-        pass

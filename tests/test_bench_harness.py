@@ -1,11 +1,18 @@
-"""Bench-harness logic guards (round-2 verdict #1: the harness itself is
-round-critical). No Spark here — pure logic: the cumulative gate-sleep
-budget, the best-scaling persistence rules, and the median."""
+"""Bench-harness guards: the median, the scaling target computed from the
+run's own rounds, BASELINE.md from the run's own numbers, the watchdog
+line, worker-group reaping, argument safety, and that a launch signals no
+process it did not start."""
 
 import json
 import os
+import signal
+import subprocess
+import sys
+import time
 
 import bench
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_median():
@@ -13,110 +20,6 @@ def test_median():
     assert bench._median([1.0, 9.0]) == 5.0
     assert bench._median([9.0, 1.0, 5.0]) == 5.0
     assert bench._median([4.0, 1.0, 9.0, 5.0]) == 4.5
-
-
-def test_gate_sleep_budget_is_cumulative(monkeypatch):
-    """wait_for_weather can never sleep more than GATE_SLEEP_BUDGET in
-    total across EVERY call in the process — the round-2 failure mode was
-    per-call budgets compounding to ~an hour."""
-    slept = []
-    monkeypatch.setattr(bench.time, "sleep", lambda s: slept.append(s))
-    monkeypatch.setattr(
-        bench, "weather_probe", lambda: {"effective_cores": 1.0}
-    )
-    monkeypatch.setattr(bench, "GATE_SLEEP_BUDGET", 70)
-    monkeypatch.setattr(bench, "PROBE_WAIT_SEC", 30)
-    bench._gate_sleep_spent = 0.0
-    p1 = bench.wait_for_weather()  # burns 30+30+10 = 70s, then gives up
-    assert sum(slept) == 70
-    assert p1["waited_s"] == 70
-    p2 = bench.wait_for_weather()  # budget exhausted: returns immediately
-    assert sum(slept) == 70
-    assert p2["waited_s"] == 0
-    # a quiet probe returns without sleeping regardless of budget state
-    monkeypatch.setattr(
-        bench, "weather_probe", lambda: {"effective_cores": 16.0}
-    )
-    bench._gate_sleep_spent = 0.0
-    assert bench.wait_for_weather()["waited_s"] == 0
-    assert sum(slept) == 70
-
-
-def _scaling(eff, n_pages=bench.STANDARD_SCALE_DOCS):
-    return {
-        "scaling_efficiency_n_to_4n": eff,
-        "n_pages": n_pages,
-        "round_ratios": [eff],
-        "round_probes": [{"effective_cores": 14.0}],
-    }
-
-
-def test_best_scaling_persistence_rules(monkeypatch, tmp_path):
-    path = str(tmp_path / "best.json")
-    monkeypatch.setattr(bench, "BEST_SCALING_PATH", path)
-    # None / no result → nothing recorded, returns existing best (None)
-    assert bench.update_best_scaling(None) is None
-    # first eligible result is recorded with a timestamp
-    b1 = bench.update_best_scaling(_scaling(0.4))
-    assert b1["scaling_efficiency_n_to_4n"] == 0.4 and "recorded_at" in b1
-    # worse result does NOT overwrite
-    b2 = bench.update_best_scaling(_scaling(0.3))
-    assert b2["scaling_efficiency_n_to_4n"] == 0.4
-    # better result does
-    b3 = bench.update_best_scaling(_scaling(0.9))
-    assert b3["scaling_efficiency_n_to_4n"] == 0.9
-    # non-standard corpus size is ineligible (different Amdahl floor)
-    b4 = bench.update_best_scaling(_scaling(0.99, n_pages=200_000))
-    assert b4["scaling_efficiency_n_to_4n"] == 0.9
-    with open(path) as f:
-        assert json.load(f)["scaling_efficiency_n_to_4n"] == 0.9
-
-
-def test_within_grant_ratchets_independently(monkeypatch, tmp_path):
-    """The within-grant pair (sized to fit the host grant) keeps its own
-    best: a contended primary run can carry the best within-grant evidence
-    and a better primary must not discard it."""
-    path = str(tmp_path / "best.json")
-    monkeypatch.setattr(bench, "BEST_SCALING_PATH", path)
-
-    def wg(eff):
-        return {
-            "scaling_efficiency_n_to_4n": eff,
-            "n_pages": 1_000_000,
-            "cpus_n": 1,
-            "cpus_4n": 4,
-            "probe": {"effective_cores": 6.0},
-        }
-
-    # within-grant evidence can precede any eligible primary run
-    s0 = _scaling(0.99, n_pages=200_000)  # primary ineligible
-    s0["within_grant"] = wg(0.5)
-    b = bench.update_best_scaling(s0)
-    assert b.get("scaling_efficiency_n_to_4n") is None
-    assert b["within_grant_best"]["scaling_efficiency_n_to_4n"] == 0.5
-    assert "recorded_at" in b["within_grant_best"]
-    # primary lands later; prior within-grant best survives
-    b = bench.update_best_scaling(_scaling(0.4))
-    assert b["scaling_efficiency_n_to_4n"] == 0.4
-    assert b["within_grant_best"]["scaling_efficiency_n_to_4n"] == 0.5
-    # worse primary carrying a better within-grant: wg ratchets up,
-    # primary stays
-    s1 = _scaling(0.3)
-    s1["within_grant"] = wg(0.82)
-    b = bench.update_best_scaling(s1)
-    assert b["scaling_efficiency_n_to_4n"] == 0.4
-    assert b["within_grant_best"]["scaling_efficiency_n_to_4n"] == 0.82
-    # better primary carrying a worse within-grant: primary ratchets,
-    # wg best survives, and the run's own within_grant is not persisted
-    s2 = _scaling(0.6)
-    s2["within_grant"] = wg(0.1)
-    b = bench.update_best_scaling(s2)
-    assert b["scaling_efficiency_n_to_4n"] == 0.6
-    assert b["within_grant_best"]["scaling_efficiency_n_to_4n"] == 0.82
-    with open(path) as f:
-        on_disk = json.load(f)
-    assert "within_grant" not in on_disk
-    assert on_disk["within_grant_best"]["scaling_efficiency_n_to_4n"] == 0.82
 
 
 def test_save_progress_merges_ring_buffer(tmp_path):
@@ -171,8 +74,6 @@ def test_watchdog_emits_partial_payload_and_exits_zero(
     assert line["timed_out"] is True
     assert line["queries"] == {"q1": 1.0}
     assert line["metric"] == "total_bench_sec" and "value" in line
-    # the payload cache carries the same partial snapshot
-    assert os.path.exists(tmp_path / "BENCH" / "payload.json")
     # normal completion disarms the watchdog entirely
     exited.clear()
     bench._done.set()
@@ -181,213 +82,11 @@ def test_watchdog_emits_partial_payload_and_exits_zero(
     assert exited == []
 
 
-def test_within_grant_slots_per_cpu_pair(monkeypatch, tmp_path):
-    """Each within-grant cpu pair ratchets in its OWN slot: a wider 2->8
-    pair must not be gated by (or evict) the 1->4 record, and the legacy
-    key keeps serving the 1->4 pair."""
-    path = str(tmp_path / "best.json")
-    monkeypatch.setattr(bench, "BEST_SCALING_PATH", path)
-
-    def wg(eff, lo, hi):
-        return {
-            "scaling_efficiency_n_to_4n": eff,
-            "n_pages": 3_000_000,
-            "cpus_n": lo,
-            "cpus_4n": hi,
-            "probe": {"effective_cores": 6.0},
-        }
-
-    s = _scaling(0.99, n_pages=200_000)  # primary ineligible
-    s["within_grant"] = wg(0.9, 1, 4)
-    b = bench.update_best_scaling(s)
-    assert b["within_grant_best"]["scaling_efficiency_n_to_4n"] == 0.9
-    # a LOWER-efficiency 2->8 pair still records (separate slot)
-    s = _scaling(0.99, n_pages=200_000)
-    s["within_grant"] = wg(0.7, 2, 8)
-    b = bench.update_best_scaling(s)
-    assert b["within_grant_best"]["scaling_efficiency_n_to_4n"] == 0.9
-    assert b["within_grant_best_2x8"]["scaling_efficiency_n_to_4n"] == 0.7
-    # 2->8 ratchets within its own slot
-    s = _scaling(0.99, n_pages=200_000)
-    s["within_grant"] = wg(0.85, 2, 8)
-    b = bench.update_best_scaling(s)
-    assert b["within_grant_best_2x8"]["scaling_efficiency_n_to_4n"] == 0.85
-    # a better primary preserves EVERY wg slot
-    b = bench.update_best_scaling(_scaling(0.5))
-    assert b["scaling_efficiency_n_to_4n"] == 0.5
-    assert b["within_grant_best"]["scaling_efficiency_n_to_4n"] == 0.9
-    assert b["within_grant_best_2x8"]["scaling_efficiency_n_to_4n"] == 0.85
-    # the md writer renders one paragraph per slot
-    lines = bench._wg_best_lines(b)
-    text = "\n".join(lines)
-    assert "within_grant_best_2x8" in text and "local[2] → local[8]" in text
-    assert text.count("MEETS the ≥ 0.8 target") == 2
-
-
-def test_headline_best_ratchet(monkeypatch, tmp_path):
-    """headline_best ratchets by pages_per_sec on the standard corpus only
-    and coexists with the scaling slots in the same file."""
-    path = str(tmp_path / "best.json")
-    monkeypatch.setattr(bench, "BEST_SCALING_PATH", path)
-
-    def rec(pps, n_pages=3_000_000):
-        return {
-            "pages_per_sec": pps,
-            "sec": 3_000_000 / pps,
-            "n_pages": n_pages,
-            "cpus": 32,
-            "probe": {"effective_cores": 7.0},
-        }
-
-    assert bench.update_best_headline(None) is None
-    b = bench.update_best_headline(rec(9000.0))
-    assert b["pages_per_sec"] == 9000.0 and "recorded_at" in b
-    # worse does not overwrite; better does; non-standard corpus ignored
-    assert bench.update_best_headline(rec(5000.0))["pages_per_sec"] == 9000.0
-    assert bench.update_best_headline(rec(47000.0))["pages_per_sec"] == 47000.0
-    assert (
-        bench.update_best_headline(rec(99000.0, n_pages=200_000))[
-            "pages_per_sec"
-        ]
-        == 47000.0
-    )
-    # coexists with scaling slots
-    bench.update_best_scaling(_scaling(0.4))
-    with open(path) as f:
-        on_disk = json.load(f)
-    assert on_disk["headline_best"]["pages_per_sec"] == 47000.0
-    assert on_disk["scaling_efficiency_n_to_4n"] == 0.4
-
-
-def test_probe_serial_floor_rolls(monkeypatch):
-    """The probe clamps effective_cores with the best serial of the last
-    30 min — protecting against a starved serial leg — but the floor
-    ROLLS: samples older than the window drop out, so one anomalously
-    fast reading cannot deflate a long-lived watcher forever."""
-    bench._SERIAL_WINDOW.clear()
-    fake_now = [1000.0]
-    monkeypatch.setattr(bench.time, "time", lambda: fake_now[0])
-
-    def probe_with(serial, par):
-        # drive weather_probe's bookkeeping directly
-        now = bench.time.time()
-        bench._SERIAL_WINDOW.append((now, serial))
-        while bench._SERIAL_WINDOW and bench._SERIAL_WINDOW[0][0] < now - 1800:
-            bench._SERIAL_WINDOW.popleft()
-        floor = min(s for _, s in bench._SERIAL_WINDOW)
-        return round(16 * floor / par, 1)
-
-    # quiet window: floor == fresh serial
-    assert probe_with(0.25, 0.5) == 8.0
-    # starved serial (2.5 s) under load: clamped by the 0.25 floor —
-    # effective cores reads LOW, not a false high
-    fake_now[0] += 60
-    assert probe_with(2.5, 4.0) == 1.0
-    # 31 min later the fast sample has rolled out; the floor re-bases on
-    # what the window still holds
-    fake_now[0] += 1860
-    assert probe_with(0.5, 1.0) == 8.0  # floor is now 0.5, not 0.25
-    bench._SERIAL_WINDOW.clear()
-
-
-def test_queries_best_ratchet(monkeypatch, tmp_path):
-    """Per-query bests ratchet independently (min seconds per name), only
-    standard-config runs ratchet, and the slot survives a new primary
-    scaling best landing (the keep-list in update_best_scaling)."""
-    monkeypatch.setattr(bench, "BEST_SCALING_PATH", str(tmp_path / "b.json"))
-    monkeypatch.setattr(bench, "CPUS", bench.STANDARD_CPUS)
-    monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.1")
-    probe = {"effective_cores": 6.0}
-    qb = bench.update_best_queries({"a": 5.0, "b": None}, probe)
-    assert qb["a"]["sec"] == 5.0 and "b" not in qb
-    assert qb["a"]["probe"] == probe
-    # worse does not overwrite; better does; independent per name
-    qb = bench.update_best_queries({"a": 9.0, "c": 1.0}, probe)
-    assert qb["a"]["sec"] == 5.0 and qb["c"]["sec"] == 1.0
-    qb = bench.update_best_queries({"a": 2.0}, probe)
-    assert qb["a"]["sec"] == 2.0
-    # non-standard parallelism or sf dir must not ratchet
-    monkeypatch.setattr(bench, "CPUS", 8)
-    assert bench.update_best_queries({"a": 0.1}, probe)["a"]["sec"] == 2.0
-    monkeypatch.setattr(bench, "CPUS", bench.STANDARD_CPUS)
-    monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.01")
-    assert bench.update_best_queries({"a": 0.1}, probe)["a"]["sec"] == 2.0
-    monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.1")
-    # a new primary scaling best must not discard the queries slot
-    bench.update_best_scaling(
-        {
-            "scaling_efficiency_n_to_4n": 0.9,
-            "n_pages": bench.STANDARD_SCALE_DOCS,
-        }
-    )
-    qb = bench.update_best_queries(None, None)
-    assert qb["a"]["sec"] == 2.0
-    # and the md renderer shows the slot
-    lines = bench._queries_best_lines({"queries_best": qb})
-    assert any("queries_best" in ln for ln in lines)
-
-
-def test_headline_only_ratchets_and_refreshes_payload(monkeypatch, tmp_path):
-    """--headline-only: one fresh-JVM worker run, pre-run probe attached,
-    ratcheted into headline_best, and the payload cache + BASELINE.md are
-    refreshed so the record ships without a full bench run."""
-    best_path = str(tmp_path / "best.json")
-    monkeypatch.setattr(bench, "BEST_SCALING_PATH", best_path)
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    (tmp_path / "BENCH").mkdir()
-    cache = tmp_path / "BENCH" / "payload.json"
-    cache.write_text(json.dumps({"queries": {}, "sf": "x"}))
-    monkeypatch.setattr(
-        bench, "weather_probe", lambda: {"effective_cores": 13.0}
-    )
-    monkeypatch.setattr(
-        bench,
-        "_run_worker",
-        lambda cpus, n_trials=None, n_docs=None, tag="": {
-            "cpus": cpus,
-            "n_pages": bench.STANDARD_SCALE_DOCS,
-            "sec": 60.0,
-            "achieved_concurrency": 30.0,
-        },
-    )
-    monkeypatch.setattr(bench, "CPUS", bench.STANDARD_CPUS)
-    rec = bench.headline_only()
-    assert rec["pages_per_sec"] == 50000.0
-    assert rec["probe"]["effective_cores"] == 13.0
-    payload = json.loads(cache.read_text())
-    assert (
-        payload["headline_best_recorded"]["pages_per_sec"] == 50000.0
-    )
-    assert (tmp_path / "BENCH" / "BASELINE.md").exists()
-    # a slower attempt does not regress the shipped record
-    monkeypatch.setattr(
-        bench,
-        "_run_worker",
-        lambda cpus, n_trials=None, n_docs=None, tag="": {
-            "cpus": cpus,
-            "n_pages": bench.STANDARD_SCALE_DOCS,
-            "sec": 120.0,
-        },
-    )
-    md = tmp_path / "BENCH" / "BASELINE.md"
-    md.write_text("SENTINEL — must survive a non-ratcheting attempt\n")
-    bench.headline_only()
-    payload = json.loads(cache.read_text())
-    assert (
-        payload["headline_best_recorded"]["pages_per_sec"] == 50000.0
-    )
-    # ...and the non-ratcheting attempt must not regenerate BASELINE.md
-    # either (it would clobber the trials table with this attempt's
-    # worse-window numbers)
-    assert md.read_text().startswith("SENTINEL")
-
-
 def test_trial_rows_payload_first(tmp_path, monkeypatch):
-    """BASELINE.md's raw-trials table must describe the payload's own
-    measurements; /tmp worker files (overwritten by every standalone
-    attempt) only fill levels the payload lacks."""
+    """BASELINE.md's raw-trials table describes the payload's own
+    measurements."""
     # pin CPUS: with SPARK_GRAFT_CPUS=4/16 exported the headline row would
-    # collide with a scaling row and rows[2] would not exist
+    # sort next to a scaling row instead of last
     monkeypatch.setattr(bench, "CPUS", 32)
     s = {
         "cpus_n": 4,
@@ -404,177 +103,6 @@ def test_trial_rows_payload_first(tmp_path, monkeypatch):
     # when regenerated under a different CPUS (payload carries the cpus)
     rows = bench._trial_rows(s, dict(payload, headline_cpus=8))
     assert f"| local[8] | 50.0, 60.0, 70.0 | 60.0 |" in rows[1]
-
-
-def _cluster_sim(eff, n_pages=1_000_000, execs=(1, 4), cores=2):
-    return {
-        "scaling_efficiency_n_to_4n": eff,
-        "n_pages": n_pages,
-        "executors_n": execs[0],
-        "executors_4n": execs[1],
-        "cores_per_executor": cores,
-        "round_probes": [{"effective_cores": 8.0}],
-    }
-
-
-def test_cluster_sim_ratchet(monkeypatch, tmp_path):
-    """Multi-executor (local-cluster) records keep one slot per topology,
-    ratcheted lexicographically (corpus size, then efficiency), and a new
-    primary best must not discard them."""
-    path = str(tmp_path / "best.json")
-    monkeypatch.setattr(bench, "BEST_SCALING_PATH", path)
-    # first record lands with a timestamp
-    b = bench.update_best_cluster_sim(_cluster_sim(0.4))
-    assert b["cluster_sim_best_1x4c2"]["scaling_efficiency_n_to_4n"] == 0.4
-    assert "recorded_at" in b["cluster_sim_best_1x4c2"]
-    # worse efficiency at the same corpus does not overwrite
-    b = bench.update_best_cluster_sim(_cluster_sim(0.3))
-    assert b["cluster_sim_best_1x4c2"]["scaling_efficiency_n_to_4n"] == 0.4
-    # better does
-    b = bench.update_best_cluster_sim(_cluster_sim(0.7))
-    assert b["cluster_sim_best_1x4c2"]["scaling_efficiency_n_to_4n"] == 0.7
-    # larger corpus beats a higher-efficiency smaller one (lower Amdahl
-    # floor = strictly stronger evidence; same rule as within-grant slots)
-    b = bench.update_best_cluster_sim(_cluster_sim(0.5, n_pages=3_000_000))
-    assert b["cluster_sim_best_1x4c2"]["scaling_efficiency_n_to_4n"] == 0.5
-    assert b["cluster_sim_best_1x4c2"]["n_pages"] == 3_000_000
-    # a different topology gets its own slot
-    b = bench.update_best_cluster_sim(_cluster_sim(0.6, execs=(2, 8)))
-    assert b["cluster_sim_best_2x8c2"]["scaling_efficiency_n_to_4n"] == 0.6
-    assert b["cluster_sim_best_1x4c2"]["scaling_efficiency_n_to_4n"] == 0.5
-    # a new primary best preserves cluster_sim slots (keep-filter)
-    best = bench.update_best_scaling(_scaling(0.9))
-    assert best["scaling_efficiency_n_to_4n"] == 0.9
-    assert best["cluster_sim_best_1x4c2"]["scaling_efficiency_n_to_4n"] == 0.5
-    assert best["cluster_sim_best_2x8c2"]["scaling_efficiency_n_to_4n"] == 0.6
-    # None is a pure read
-    b = bench.update_best_cluster_sim(None)
-    assert set(b) == {"cluster_sim_best_1x4c2", "cluster_sim_best_2x8c2"}
-
-
-def test_scaling_summary_digest():
-    """_scaling_summary flattens best_scaling.json into one efficiency per
-    slot + a target verdict; headline_best (a throughput record, not a
-    scaling pair) must not leak in, and an empty store reports unmet."""
-    empty = bench._scaling_summary(None)
-    assert empty["target_met"] is False and empty["best"] is None
-    best = {
-        "scaling_efficiency_n_to_4n": 0.507,
-        "n_pages": 3_000_000,
-        "within_grant_best": {"scaling_efficiency_n_to_4n": 0.915},
-        "cluster_sim_best_1x4c1": {"scaling_efficiency_n_to_4n": 0.85},
-        "cluster_sim_best_1x4c2": {"scaling_efficiency_n_to_4n": 0.552},
-        "headline_best": {"pages_per_sec": 27711.0},
-        "recorded_at": "2026-08-17T00:00:00Z",
-    }
-    s = bench._scaling_summary(best)
-    assert s["efficiency_by_slot"] == {
-        "primary_4_to_16": 0.507,
-        "within_grant_best": 0.915,
-        "cluster_sim_best_1x4c1": 0.85,
-        "cluster_sim_best_1x4c2": 0.552,
-    }
-    assert s["target_met"] is True and s["best"] == 0.915
-
-
-def test_refresh_payload_md_recomputes_summary(monkeypatch, tmp_path):
-    """_refresh_payload_md must recompute scaling_best_summary from the
-    same store the slot paragraphs are rendered from — the earlier
-    per-mode refresh copies kept a stale cached summary, letting the
-    MET/not-met headline contradict a ≥0.8 slot printed below it."""
-    monkeypatch.setattr(bench, "BEST_SCALING_PATH", str(tmp_path / "b.json"))
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    (tmp_path / "BENCH").mkdir()
-    cache = tmp_path / "BENCH" / "payload.json"
-    cache.write_text(
-        json.dumps(
-            {
-                "queries": {},
-                "sf": "x",
-                "scaling_best_summary": {
-                    "target_met": False,
-                    "best": 0.1,
-                    "target": 0.8,
-                    "efficiency_by_slot": {},
-                },
-            }
-        )
-    )
-    # a watcher attempt ratchets a >=0.8 slot AFTER the cache was written
-    bench.update_best_scaling(
-        {
-            "within_grant": {
-                "scaling_efficiency_n_to_4n": 0.9,
-                "n_pages": 3_000_000,
-                "cpus_n": 1,
-                "cpus_4n": 4,
-            }
-        }
-    )
-    bench._refresh_payload_md()
-    payload = json.loads(cache.read_text())
-    assert payload["scaling_best_summary"]["target_met"] is True
-    md = (tmp_path / "BENCH" / "BASELINE.md").read_text()
-    assert "Scaling target ≥ 0.8 N→4N: MET" in md
-
-
-def _load_watcher():
-    import importlib.util
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "quiet_scaling_watch",
-        os.path.join(repo, "scripts", "quiet_scaling_watch.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_watcher_queries_gate(monkeypatch, tmp_path):
-    """--queries-only fires for a headline query with NO banked slot at
-    any ≥4.5-core grant (first record beats nothing), and otherwise only
-    when the window beats the worst banked probe context."""
-    w = _load_watcher()
-    path = str(tmp_path / "best.json")
-    monkeypatch.setattr(w, "BEST_SCALING_PATH", path)
-    # empty store: any window fills the first slots
-    assert w.queries_window_useful(5.0, -1.0) is True
-    full = {
-        name: {"sec": 1.0, "probe": {"effective_cores": 5.5}}
-        for name in w.HEADLINE_QUERY_NAMES
-    }
-    with open(path, "w") as f:
-        json.dump({"queries_best": full}, f)
-    # all slots banked at 5.5: a 5.0-core window cannot improve them
-    assert w.queries_window_useful(5.0, -1.0) is False
-    assert w.queries_window_useful(6.1, -1.0) is True
-    # futile memo: a 6.1-core attempt that improved nothing blocks
-    # re-fires until a strictly better window appears
-    assert w.queries_window_useful(6.1, 6.1) is False
-    assert w.queries_window_useful(6.2, 6.1) is False  # within +0.25 band
-    assert w.queries_window_useful(6.5, 6.1) is True
-    # one query missing its slot entirely -> fire regardless of probes...
-    partial = dict(full)
-    del partial[w.HEADLINE_QUERY_NAMES[0]]
-    with open(path, "w") as f:
-        json.dump({"queries_best": partial}, f)
-    assert w.queries_window_useful(5.0, -1.0) is True
-    # ...but still never below the futile memo (an erroring query must
-    # not hold the gate open for back-to-back re-fires)
-    assert w.queries_window_useful(5.0, 5.0) is False
-    # a stale entry no longer in HEADLINE_QUERY_NAMES must not pin the
-    # banked-probe floor: all current names banked at 5.5, stale at 3.0
-    stale = dict(full)
-    stale["renamed_query_v1"] = {"sec": 1.0, "probe": {"effective_cores": 3.0}}
-    with open(path, "w") as f:
-        json.dump({"queries_best": stale}, f)
-    assert w.queries_window_useful(5.0, -1.0) is False
-    # snapshot helper: stable view keyed by current names only
-    snap = w.queries_snapshot()
-    assert set(snap) == set(w.HEADLINE_QUERY_NAMES)
-    assert all(v == 1.0 for v in snap.values())
 
 
 def test_run_child_reaps_grandchildren():
@@ -624,9 +152,9 @@ def test_run_child_reaps_grandchildren():
 
 
 def test_sigterm_reaps_worker_groups(tmp_path):
-    """Preemption TERMs foreign bench.py processes; the handler must take
-    in-flight worker groups (and their JVM grandchildren) down too —
-    dying bare would orphan exactly the JVMs preemption wanted gone."""
+    """A TERM (e.g. from a `timeout` wrapper) must take the in-flight
+    worker groups (and their JVM grandchildren) down too — dying bare
+    would orphan the worker JVMs."""
     import os
     import signal
     import subprocess
@@ -680,21 +208,13 @@ def test_sigterm_reaps_worker_groups(tmp_path):
             p.kill()
 
 
-# ---------------------------------------------------------------------------
-# Round-4 evidence-path contract: provisional-JSON-first output + arg safety
-# (VERDICT r3 "Next round" #1 and #2)
-
-
 def test_help_exits_fast_without_running(tmp_path):
-    """-h/--help/unknown args must print usage + the provisional JSON line
-    and exit 2 WITHOUT starting a run or touching BENCH/payload.json
-    (r3: the judge's `--help` silently launched a full ~13-min bench)."""
+    """-h/--help/unknown args must print usage and exit 2 WITHOUT starting
+    a run."""
     import subprocess
     import sys as _sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    payload_path = os.path.join(repo, "BENCH", "payload.json")
-    before = open(payload_path, "rb").read() if os.path.exists(payload_path) else None
     for arg in ("--help", "-h", "--typo-flag"):
         r = subprocess.run(
             [_sys.executable, os.path.join(repo, "bench.py"), arg],
@@ -704,286 +224,133 @@ def test_help_exits_fast_without_running(tmp_path):
         )
         assert r.returncode == 2, (arg, r.returncode, r.stderr[-500:])
         assert "usage:" in r.stderr
-        p = json.loads(r.stdout.strip().splitlines()[-1])
-        assert p["provisional"] is True
-        assert p["metric"] == "total_bench_sec"
-        assert "scaling_best_summary" in p
-    after = open(payload_path, "rb").read() if os.path.exists(payload_path) else None
-    assert before == after, "help/unknown path must not rewrite payload.json"
 
 
-def test_provisional_payload_from_disk(monkeypatch, tmp_path):
-    """The provisional payload is assembled purely from disk caches,
-    degrades to an honest empty shell when neither cache exists, and —
-    round-5 ADVICE fix — NEVER presents cached measurements in the keys a
-    flag-unaware tail parser would read as this run's numbers: the
-    previous payload rides only under ``cached_previous_run``."""
+
+
+def test_scaling_target_from_this_run(monkeypatch):
+    """Efficiency and the ≥ 0.8 target come from this run's rounds: the
+    median of per-round N→4N ratios, nothing read from disk."""
+    secs = {4: [100.0, 100.0, 100.0], 16: [40.0, 25.0, 30.0]}
+
+    def fake_worker(cpus, n_trials=None, n_docs=None):
+        return {"cpus": cpus, "n_pages": 1000, "sec": secs[cpus].pop(0)}
+
+    monkeypatch.setattr(bench, "_run_worker", fake_worker)
+    monkeypatch.setattr(bench, "SCALE_CPUS", (4, 16))
+    monkeypatch.setattr(bench, "SCALE_TRIALS", 3)
+    s = bench.run_scaling()
+    assert s["round_ratios"] == [0.625, 1.0, 0.833]
+    assert s["scaling_efficiency_n_to_4n"] == 0.833
+    assert s["target"] == 0.8 and s["target_met"] is True
+    assert s["n_trials"] == [100.0, 100.0, 100.0]
+    assert s["4n_trials"] == [40.0, 25.0, 30.0]
+
+    secs.update({4: [100.0], 16: [50.0]})
+    monkeypatch.setattr(bench, "SCALE_TRIALS", 1)
+    s = bench.run_scaling()
+    assert s["scaling_efficiency_n_to_4n"] == 0.5 and s["target_met"] is False
+
+
+def test_bench_md_reports_only_this_run(monkeypatch, tmp_path):
     monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    monkeypatch.setattr(
-        bench, "BEST_SCALING_PATH", str(tmp_path / "BENCH" / "best.json")
+    payload = {
+        "value": 12.5,
+        "queries": {"q": 1.0},
+        "sf": "sf",
+        "bench_docs": 1000,
+        "pages_per_sec": 80.0,
+        "headline_trials": [12.0, 12.5],
+        "headline_cpus": 8,
+        "scaling": {
+            "cpus_n": 1,
+            "cpus_4n": 4,
+            "n_trials": [40.0],
+            "4n_trials": [20.0],
+            "scaling_efficiency_n_to_4n": 0.5,
+            "target": 0.8,
+            "target_met": False,
+            "round_ratios": [0.5],
+        },
+    }
+    bench.write_bench_md(payload)
+    md = (tmp_path / "BENCH" / "BASELINE.md").read_text()
+    assert "**Scaling efficiency N→4N: 0.5** — target ≥ 0.8 not met" in md
+    assert "| headline | local[8] | 12.0, 12.5 | 12.2 |" in md
+    assert "| scaling | local[4] | 20.0 | 20.0 |" in md
+    assert "best" not in md.lower()
+
+
+def _session_groups(sid: int) -> set[int]:
+    """Process groups of the live processes in session ``sid``."""
+    groups = set()
+    for d in os.listdir("/proc"):
+        if d.isdigit():
+            try:
+                if os.getsid(int(d)) == sid:
+                    groups.add(os.getpgid(int(d)))
+            except OSError:
+                pass
+    return groups
+
+
+def test_launch_signals_no_foreign_process(tmp_path):
+    """A scripted launch — a wrapper shell around `timeout … python
+    bench.py` — must leave alive every process it did not start: here an
+    unrelated process whose command line mentions bench.py, and the
+    wrapper shell itself."""
+    sentinel = subprocess.Popen(
+        [sys.executable, "-c", "import time; time.sleep(120)", "bench.py"],
+        start_new_session=True,
     )
-    # no caches at all → still a valid payload, provisional, nulls honest
-    p = bench._provisional_payload()
-    assert p["provisional"] is True and p["pages_per_sec"] is None
-    assert p["scaling_best_summary"]["target_met"] is False
-    assert p["cached_previous_run"] is None
-    # with a payload cache + a gate-meeting banked slot: the banked slots
-    # ride in their labeled keys, the cached numbers ONLY under
-    # cached_previous_run — the measured-looking keys stay null/empty
-    os.makedirs(tmp_path / "BENCH", exist_ok=True)
-    with open(tmp_path / "BENCH" / "payload.json", "w") as f:
-        json.dump({"value": 70.3, "pages_per_sec": 123.0, "queries": {"q": 1.0}}, f)
-    with open(tmp_path / "BENCH" / "best.json", "w") as f:
-        json.dump(
-            {
-                "cluster_sim_best": {"scaling_efficiency_n_to_4n": 0.85},
-                "headline_best": {"pages_per_sec": 999.0},
-            },
-            f,
-        )
-    p = bench._provisional_payload()
-    assert p["value"] is None and p["pages_per_sec"] is None
-    assert p["queries"] == {} and p["headline_trials"] == []
-    assert p["scaling"] is None and p["bench_docs"] is None
-    assert p["cached_previous_run"]["pages_per_sec"] == 123.0
-    assert p["cached_previous_run"]["queries"] == {"q": 1.0}
-    assert p["scaling_best_summary"]["target_met"] is True
-    assert p["headline_best_recorded"]["pages_per_sec"] == 999.0
-
-
-def test_import_time_disk_artifact(tmp_path):
-    """Round-5 VERDICT #1: ANY bench.py invocation — here the cheapest
-    one, `--help` — must leave a fresh timestamped
-    BENCH/provisional_latest.json on disk even when stdout is never
-    captured, carrying the banked scaling slots."""
-    import subprocess
-    import sys as _sys
-    import time as _time
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    artifact = os.path.join(repo, "BENCH", "provisional_latest.json")
-    t0 = _time.time()
-    r = subprocess.run(
-        [_sys.executable, os.path.join(repo, "bench.py"), "--help"],
-        stdout=subprocess.DEVNULL,  # capture-less spawn, the r3/r4 mode
+    wrapper = subprocess.Popen(
+        ["bash", "-c", f"timeout 60 {sys.executable} bench.py; echo rc=$?"],
+        cwd=REPO,
+        stdout=subprocess.DEVNULL,
         stderr=subprocess.DEVNULL,
-        timeout=30,
-    )
-    assert r.returncode == 2
-    assert os.path.exists(artifact)
-    assert os.path.getmtime(artifact) >= t0 - 1, "artifact mtime is stale"
-    with open(artifact) as f:
-        p = json.load(f)
-    assert p["provisional"] is True
-    assert p["metric"] == "total_bench_sec"
-    assert "scaling_best_summary" in p and "written_at" in p
-    assert p["written_at_unix"] >= t0 - 1
-    # same integrity contract as the stdout line: no stale measured keys
-    assert p["value"] is None and p["pages_per_sec"] is None
-
-
-def test_graded_run_killed_at_launch_leaves_parseable_tail(tmp_path):
-    """kill -9 two seconds after a graded launch must still leave a
-    tail-parseable JSON line (the r2/r3 driver windows gave the bench
-    ~0-1 s of runtime and recorded nothing)."""
-    import signal as _signal
-    import subprocess
-    import sys as _sys
-    import time as _time
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    # --skip-scaling exercises the same provisional-first path as the
-    # bare graded run without preempting a live quiet-window watcher;
-    # SPARK_GRAFT_SCALE_TMPDIR sandboxes the spawned bench's stale-file
-    # sweep away from any live attempt's shared /tmp worker files, and
-    # the SIGKILL goes to the process GROUP so the race window can't
-    # orphan a just-spawned JVM
-    p = subprocess.Popen(
-        [_sys.executable, os.path.join(repo, "bench.py"), "--skip-scaling"],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.DEVNULL,
-        text=True,
-        env=dict(os.environ, SPARK_GRAFT_SCALE_TMPDIR=str(tmp_path)),
+        env=dict(
+            os.environ,
+            SPARK_GRAFT_BENCH_DIR=str(tmp_path),
+            SPARK_GRAFT_DRIVER_MEM="1g",
+        ),
         start_new_session=True,
     )
     try:
-        _time.sleep(2)
+        time.sleep(5)
+        assert sentinel.poll() is None, "sentinel was signalled"
+        assert wrapper.poll() is None, "wrapper shell was signalled"
     finally:
-        try:
-            os.killpg(p.pid, _signal.SIGKILL)
-        except ProcessLookupError:
-            pass
-    out, _ = p.communicate(timeout=30)
-    lines = [ln for ln in out.splitlines() if ln.strip()]
-    assert lines, "no stdout within 2 s of launch"
-    parsed = json.loads(lines[-1])
-    assert parsed["provisional"] is True
-    assert "scaling_best_summary" in parsed
+        # `timeout` moves itself into its own process group: kill every
+        # group in the wrapper's session, not only the wrapper's
+        for _ in range(3):
+            groups = _session_groups(wrapper.pid)
+            if not groups:
+                break
+            for pgid in groups:
+                try:
+                    os.killpg(pgid, signal.SIGKILL)
+                except ProcessLookupError:
+                    pass
+            time.sleep(0.5)
+        wrapper.wait(timeout=10)
+        sentinel.kill()
+        sentinel.wait(timeout=10)
 
 
-def test_write_payload_cache_atomic_with_bak(monkeypatch, tmp_path):
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    bench._write_payload_cache({"v": 1})
-    cache = tmp_path / "BENCH" / "payload.json"
-    assert json.load(open(cache)) == {"v": 1}
-    assert not os.path.exists(str(cache) + ".bak")
-    bench._write_payload_cache({"v": 2})
-    assert json.load(open(cache)) == {"v": 2}
-    assert json.load(open(str(cache) + ".bak")) == {"v": 1}
-    # no torn temp files left behind
-    assert not [f for f in os.listdir(tmp_path / "BENCH") if ".tmp" in f]
+def test_import_writes_nothing_under_bench():
+    bench_dir = os.path.join(REPO, "BENCH")
 
+    def snapshot() -> dict:
+        if not os.path.isdir(bench_dir):
+            return {}
+        return {
+            n: os.stat(os.path.join(bench_dir, n)).st_mtime_ns
+            for n in os.listdir(bench_dir)
+        }
 
-def test_watcher_driver_window_sentinel(monkeypatch, tmp_path):
-    """VERDICT r3 #6: a fresh driver-round artifact (CORRECTNESS_r*/
-    BENCH_r*) stands the watcher down AND aborts an in-flight attempt."""
-    import subprocess
-    import sys as _sys
-    import time as _time
-
-    w = _load_watcher()
-    monkeypatch.setattr(w, "REPO", str(tmp_path))
-    monkeypatch.setattr(w, "DRIVER_WINDOW_SEC", 1800)
-    monkeypatch.setattr(w, "ABORT_CHECK_SEC", 0.2)
-    # no sentinel files → inactive
-    assert w.driver_window_active() is False
-    # fresh sentinel → active
-    sentinel = tmp_path / "CORRECTNESS_r99.json"
-    sentinel.write_text("{}")
-    assert w.driver_window_active() is True
-    # stale sentinel (mtime pushed back past the window) → inactive
-    old = _time.time() - 3600
-    os.utime(sentinel, (old, old))
-    assert w.driver_window_active() is False
-    # disabled → always inactive
-    sentinel.write_text("{}")
-    monkeypatch.setattr(w, "DRIVER_WINDOW_SEC", 0)
-    assert w.driver_window_active() is False
-    # in-flight abort: a long-running attempt dies within ~1 s of the
-    # sentinel appearing, and wait_attempt reports why
-    monkeypatch.setattr(w, "DRIVER_WINDOW_SEC", 1800)
-    proc = subprocess.Popen(
-        [_sys.executable, "-c", "import time; time.sleep(60)"],
-        start_new_session=True,
+    before = snapshot()
+    r = subprocess.run(
+        [sys.executable, "-c", "import bench"], cwd=REPO, timeout=60
     )
-    t0 = _time.time()
-    rc = w.wait_attempt(proc, timeout=30)
-    assert rc == "driver-window"
-    assert _time.time() - t0 < 10
-    assert proc.poll() is not None, "attempt process still alive"
-
-
-def test_watcher_wait_attempt_normal_and_timeout(monkeypatch, tmp_path):
-    import subprocess
-    import sys as _sys
-
-    w = _load_watcher()
-    monkeypatch.setattr(w, "REPO", str(tmp_path))  # no sentinels
-    monkeypatch.setattr(w, "ABORT_CHECK_SEC", 0.2)
-    # normal completion passes the exit code through
-    p1 = subprocess.Popen(
-        [_sys.executable, "-c", "raise SystemExit(7)"], start_new_session=True
-    )
-    assert w.wait_attempt(p1, timeout=30) == 7
-    # timeout kills the process group and reports "timeout"
-    p2 = subprocess.Popen(
-        [_sys.executable, "-c", "import time; time.sleep(60)"],
-        start_new_session=True,
-    )
-    assert w.wait_attempt(p2, timeout=1) == "timeout"
-    assert p2.poll() is not None
-
-
-def test_graded_run_sigterm_emits_latest_payload(monkeypatch, tmp_path):
-    """A `timeout`-style SIGTERM (the r2 driver-budget failure mode) must
-    leave a tail-parseable JSON line: the latest payload snapshot flagged
-    terminated=true (or, if TERM lands before the snapshot seeds, the
-    launch-time provisional line)."""
-    import signal as _signal
-    import subprocess
-    import sys as _sys
-    import time as _time
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    p = subprocess.Popen(
-        [_sys.executable, os.path.join(repo, "bench.py"), "--skip-scaling"],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.DEVNULL,
-        text=True,
-        env=dict(os.environ, SPARK_GRAFT_SCALE_TMPDIR=str(tmp_path)),
-        start_new_session=True,
-    )
-    _time.sleep(3)
-    try:
-        os.killpg(p.pid, _signal.SIGTERM)
-    except ProcessLookupError:
-        pass
-    out, _ = p.communicate(timeout=60)
-    assert p.returncode == 143
-    lines = [ln for ln in out.splitlines() if ln.strip()]
-    assert lines
-    parsed = json.loads(lines[-1])
-    assert parsed.get("terminated") or parsed.get("provisional")
-    assert parsed["metric"] == "total_bench_sec"
-    if parsed.get("terminated"):
-        # the snapshot carries the ratcheted bests seeded at arm time
-        assert "scaling_best_recorded" in parsed
-
-
-def test_update_best_endurance_ratchet(monkeypatch, tmp_path):
-    """Endurance slot ratchets lexicographically on (n_pages,
-    pages_per_sec): a larger-corpus completion always wins; same-size
-    records race on throughput."""
-    monkeypatch.setattr(
-        bench, "BEST_SCALING_PATH", str(tmp_path / "best.json")
-    )
-    r1 = {"n_pages": 10_000_000, "pages_per_sec": 40_000.0, "sec": 250.0}
-    assert bench.update_best_endurance(r1)["pages_per_sec"] == 40_000.0
-    # smaller corpus, absurd throughput: must NOT replace
-    r2 = {"n_pages": 1_000_000, "pages_per_sec": 9e9, "sec": 1.0}
-    assert bench.update_best_endurance(r2)["n_pages"] == 10_000_000
-    # same corpus, faster: replaces
-    r3 = {"n_pages": 10_000_000, "pages_per_sec": 41_000.0, "sec": 240.0}
-    best = bench.update_best_endurance(r3)
-    assert best["pages_per_sec"] == 41_000.0
-    assert "recorded_at" in best
-    # no-op read-back
-    assert bench.update_best_endurance(None)["pages_per_sec"] == 41_000.0
-
-
-def test_primary_ratchet_preserves_endurance_slot(monkeypatch, tmp_path):
-    """A new primary 4->16 record rebuilds the best-scaling dict but must
-    carry every independent slot forward — including endurance_best."""
-    path = str(tmp_path / "best.json")
-    monkeypatch.setattr(bench, "BEST_SCALING_PATH", path)
-    bench.update_best_endurance(
-        {"n_pages": 10_000_000, "pages_per_sec": 40_000.0, "sec": 250.0}
-    )
-    b = bench.update_best_scaling(_scaling(0.9))
-    assert b["scaling_efficiency_n_to_4n"] == 0.9
-    assert b["endurance_best"]["n_pages"] == 10_000_000
-
-
-def test_watcher_endurance_gate(monkeypatch, tmp_path):
-    """The watcher fires --endurance only when the window can plausibly
-    improve the banked record: no record yet, or a clearly better grant
-    than the record's probe; futility memo closes the gate."""
-    w = _load_watcher()
-    monkeypatch.setattr(w, "BEST_SCALING_PATH", str(tmp_path / "best.json"))
-    # no record yet → any grant above the futile memo is useful
-    assert w.endurance_window_useful(8.0, -1.0) is True
-    assert w.endurance_window_useful(8.0, 8.0) is False  # memoized futile
-    with open(tmp_path / "best.json", "w") as f:
-        json.dump(
-            {
-                "endurance_best": {
-                    "n_pages": 10_000_000,
-                    "pages_per_sec": 36_000.0,
-                    "probe": {"effective_cores": 6.3},
-                }
-            },
-            f,
-        )
-    assert w.endurance_window_useful(6.5, -1.0) is False  # not clearly better
-    assert w.endurance_window_useful(7.4, -1.0) is True  # > 6.3 + 1.0
-    assert w.endurance_window_useful(7.4, 7.3) is False  # memo wins
+    assert r.returncode == 0
+    assert snapshot() == before

@@ -11,8 +11,7 @@ cross-JVM shuffle serialization of every intermediate schema, and
 broadcast of the driver-built config into foreign processes.
 
 The local-cluster leg runs in a subprocess because one python process
-cannot host two SparkContexts with different masters; the bench harness
-launches its cluster legs the same way (bench.py ``--cluster-worker``).
+cannot host two SparkContexts with different masters.
 """
 
 import json

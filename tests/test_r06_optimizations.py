@@ -12,9 +12,6 @@ fails loudly if a refactor silently undoes it:
   flip oracle hashes).
 """
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
 from lsh_qd_spark.config import DedupConfig
@@ -145,30 +142,3 @@ def test_cosine_from_norms_bit_identical(spark):
         else:
             # exact bit equality, not approx
             assert r["inline"] == r["pre"]
-
-
-def test_warm_session_is_idempotent_and_gated(monkeypatch):
-    from lsh_qd_spark import session as sess
-
-    calls = []
-    monkeypatch.setattr(sess, "_warm_session", lambda s: calls.append(1))
-    monkeypatch.setenv("SPARK_GRAFT_SESSION_WARMUP", "0")
-    # gated off: get_spark must not warm
-    s = sess.get_spark(app_name="warm_gate_test")
-    assert calls == []
-    monkeypatch.delenv("SPARK_GRAFT_SESSION_WARMUP")
-    s2 = sess.get_spark(app_name="warm_gate_test")
-    assert calls == [1]
-    assert s is s2  # same session either way
-
-
-@pytest.mark.skipif(
-    os.environ.get("SPARK_GRAFT_SESSION_WARMUP") == "0",
-    reason="warm-up disabled in this environment",
-)
-def test_warmed_registry_prevents_rewarm(spark):
-    from lsh_qd_spark.session import _WARMED, _warm_session
-
-    app = spark.sparkContext.applicationId
-    _warm_session(spark)  # idempotent: registry short-circuits
-    assert app in _WARMED
